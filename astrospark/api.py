@@ -18,6 +18,8 @@ reference's per-JVM singletons (AstroParser.java:67-81).
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 
 from astrospark.engine.extraction import (
@@ -25,6 +27,17 @@ from astrospark.engine.extraction import (
     extract_spans,
     load_default_artifacts,
 )
+
+
+class _Request:
+    """One queued ``process_text`` call; ``outcome`` stays None until a
+    kernel call sets it to the caller's spans or to its exception."""
+
+    __slots__ = ("text", "outcome")
+
+    def __init__(self, text: str):
+        self.text = text
+        self.outcome: list[dict] | Exception | None = None
 
 
 class AstroEngine:
@@ -37,6 +50,9 @@ class AstroEngine:
         self._spark = spark
         self._bcast = None
         self.artifacts = artifacts or load_default_artifacts()
+        self._kernel_lock = threading.Lock()  # one kernel call at a time
+        self._queue_lock = threading.Lock()  # guards _pending
+        self._pending: list[_Request] = []
 
     @property
     def spark(self) -> SparkSession:
@@ -56,30 +72,78 @@ class AstroEngine:
 
     def process_text(self, text: str) -> list[dict]:
         """One string → ordered span dicts (the /processAstroText shape).
-        Runs the kernel directly on a 1-doc batch — a service endpoint
-        should not pay a Spark job per request."""
+
+        Runs the kernel driver-side — a service endpoint should not pay a
+        Spark job per request. Concurrent callers share kernel calls: each
+        queues its text and takes the engine's kernel lock; a caller whose
+        answer a previous holder already produced returns it, otherwise it
+        runs one ``extract_batch`` over every text queued so far. A batch
+        is whatever arrived while the previous call ran (a lone request
+        is a batch of one), so there is no timer and no size setting; the
+        call's time includes the wait for the lock. Kernel calls on one
+        engine run one at a time, which also keeps the model's lazily
+        built indexes from being filled by two threads at once."""
+        req = _Request(text)
+        with self._queue_lock:
+            self._pending.append(req)
+        with self._kernel_lock:
+            if req.outcome is None:
+                with self._queue_lock:
+                    batch, self._pending = self._pending, []
+                self._run_batch(batch)
+        if isinstance(req.outcome, Exception):
+            raise req.outcome
+        return req.outcome
+
+    def _run_batch(self, batch: list[_Request]) -> None:
+        """One kernel call for the whole batch. If it raises, each text is
+        re-run on its own, so one bad text fails only its own caller."""
+        try:
+            outcomes = self._extract([r.text for r in batch])
+        except Exception as exc:
+            if len(batch) == 1:
+                outcomes = [exc]  # already run alone
+            else:
+                outcomes = [self._extract_alone(r.text) for r in batch]
+        for r, outcome in zip(batch, outcomes):
+            r.outcome = outcome
+
+    def _extract_alone(self, text: str) -> list[dict] | Exception:
+        try:
+            return self._extract([text])[0]
+        except Exception as exc:
+            return exc
+
+    def _extract(self, texts: list[str]) -> list[list[dict]]:
+        """Texts → one span-dict list per text, from one kernel call.
+        ``extract_batch`` is looked up on the module at call time."""
         import pandas as pd
 
-        from astrospark.kernel import extract_batch
+        from astrospark import kernel
 
         vocab, trie, model = self.artifacts
         pdf = pd.DataFrame(
             {
-                "doc_id": ["_request"],
-                "spans": [[{"kind": "text", "text": text, "media_ref": "", "offset": 0}]],
+                "doc_id": range(len(texts)),
+                "spans": [
+                    [{"kind": "text", "text": t, "media_ref": "", "offset": 0}]
+                    for t in texts
+                ],
             }
         )
-        out = extract_batch(pdf, vocab, trie, model)
-        return [
-            {
-                "seq": int(r.seq),
-                "kind": r.kind,
-                "text": r.text,
-                "media_ref": r.media_ref,
-                "offset": int(r.offset),
-            }
-            for r in out.itertuples()
-        ]
+        out = kernel.extract_batch(pdf, vocab, trie, model)
+        answers: list[list[dict]] = [[] for _ in texts]
+        for r in out.itertuples():
+            answers[r.doc_id].append(
+                {
+                    "seq": int(r.seq),
+                    "kind": r.kind,
+                    "text": r.text,
+                    "media_ref": r.media_ref,
+                    "offset": int(r.offset),
+                }
+            )
+        return answers
 
     # -- cluster-scale ------------------------------------------------------
 

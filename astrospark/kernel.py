@@ -151,10 +151,13 @@ def _process_units(unit_doc, unit_base, unit_texts, vocab, trie, model):
     in_interval = np.zeros(n, dtype=bool)
     u_ws = uniq_ser.isin(_WS_TOKENS).to_numpy(dtype=bool)
     alph, A, root_child, trans_index, trie_children, trie_is_end = flatten_trie(trie)
-    u_alph = alph.get_indexer(uniq_arr).astype(np.int64)
-    u_first = np.where(u_alph >= 0, root_child[np.maximum(u_alph, 0)], -1)
-    first_child = u_first[tok_codes]
-    cand_idx = np.flatnonzero(first_child >= 0)
+    if A:
+        u_alph = alph.get_indexer(uniq_arr).astype(np.int64)
+        u_first = np.where(u_alph >= 0, root_child[np.maximum(u_alph, 0)], -1)
+        first_child = u_first[tok_codes]
+        cand_idx = np.flatnonzero(first_child >= 0)
+    else:  # a gazetteer of blank names only: no transitions, no matches
+        cand_idx = np.empty(0, dtype=np.int64)
     if len(cand_idx):
         unit_ends = unit_starts + counts
         cand_end = unit_ends[

@@ -21,9 +21,13 @@ reference's REST-path newline/tab→space normalization
 blank input → 204 No Content (AstroParser.java:96-98 null-result path).
 
 Pure stdlib (http.server, ThreadingHTTPServer) — NO Spark session is
-created: AstroEngine.process_text runs the Arrow kernel driver-side on a
-1-doc batch, exactly what a request/response endpoint should do (the
-cluster path is for tables, not single strings).
+created: AstroEngine.process_text runs the Arrow kernel driver-side,
+exactly what a request/response endpoint should do (the cluster path is
+for tables, not single strings). Each handler thread calls
+``process_text`` once per request; concurrent requests share kernel
+calls (one ``extract_batch`` over every text that arrived while the
+previous call ran), so a response's ``runtime`` includes the wait for
+the engine's kernel lock.
 
 Run: python -m astrospark.service [port]
 """

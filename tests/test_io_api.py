@@ -81,6 +81,106 @@ def test_api_process_text(spark, artifacts):
     assert eng.process_text("   ") == []
 
 
+def _oracle_spans(text, artifacts):
+    from astrospark.oracle import process_document
+
+    vocab, trie, model = artifacts
+    doc = [{"kind": "text", "text": text, "media_ref": "", "offset": 0}]
+    return process_document(doc, vocab, trie, model)
+
+
+def test_process_text_concurrent_first_calls(artifacts, request_texts, run_together):
+    """Concurrent first calls on a fresh engine (cold model indexes) each
+    get the serial answer: kernel calls on one engine never overlap."""
+    import sys
+
+    from astrospark.api import AstroEngine
+    from astrospark.engine.extraction import load_default_artifacts
+
+    serial = [AstroEngine(artifacts=artifacts).process_text(t) for t in request_texts]
+    assert any(serial)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for _ in range(3):  # each fresh model is one chance for the cold-index race
+            engine = AstroEngine(artifacts=load_default_artifacts())
+            assert run_together(engine.process_text, request_texts) == serial
+    finally:
+        sys.setswitchinterval(interval)
+
+
+def _call_behind_held_kernel(engine, texts, monkeypatch, run_together, fail_marker=None):
+    """Wrap ``kernel.extract_batch`` to count each call's docs and to raise
+    on any batch containing ``fail_marker``. One call holds the kernel
+    while ``texts`` are sent concurrently; it is released once all of them
+    are queued. Returns their results and the doc count of every kernel
+    call after the holder's."""
+    import threading
+    import time
+
+    from astrospark import kernel
+
+    real = kernel.extract_batch
+    sizes: list[int] = []
+    entered, release = threading.Event(), threading.Event()
+
+    def wrapped(pdf, *a, **kw):
+        sizes.append(len(pdf))
+        if len(sizes) == 1:
+            entered.set()
+            release.wait(30)
+        if fail_marker is not None and any(
+            fail_marker in s["text"] for spans in pdf["spans"] for s in spans
+        ):
+            raise ValueError("bad text")
+        return real(pdf, *a, **kw)
+
+    monkeypatch.setattr(kernel, "extract_batch", wrapped)
+    holder = threading.Thread(target=engine.process_text, args=("We see M31.",), daemon=True)
+    holder.start()
+    assert entered.wait(30)
+
+    def release_when_queued():
+        deadline = time.monotonic() + 30
+        while len(engine._pending) < len(texts) and time.monotonic() < deadline:
+            time.sleep(0.005)
+        release.set()
+
+    threading.Thread(target=release_when_queued, daemon=True).start()
+    got = run_together(engine.process_text, texts)
+    holder.join(30)
+    assert not holder.is_alive()
+    return got, sizes[1:]
+
+
+def test_process_text_shares_kernel_calls(artifacts, request_texts, run_together, monkeypatch):
+    """Callers that arrive while a kernel call runs share the next one."""
+    from astrospark.api import AstroEngine
+
+    engine = AstroEngine(artifacts=artifacts)
+    got, sizes = _call_behind_held_kernel(engine, request_texts, monkeypatch, run_together)
+    assert got == [_oracle_spans(t, artifacts) for t in request_texts]
+    assert sizes == [len(request_texts)]
+
+
+def test_process_text_failure_is_isolated(artifacts, request_texts, run_together, monkeypatch):
+    """A text that makes the kernel raise fails only its own caller: the
+    shared call is re-run one text per call."""
+    from astrospark.api import AstroEngine
+
+    marker = "POISON"
+    texts = list(request_texts)
+    texts[3] = f"We see NGC 1275 and {marker} here."
+    engine = AstroEngine(artifacts=artifacts)
+    got, sizes = _call_behind_held_kernel(engine, texts, monkeypatch, run_together, marker)
+    assert sizes == [len(texts)] + [1] * len(texts)
+    assert isinstance(got[3], ValueError)
+    for i, text in enumerate(texts):
+        if i != 3:
+            assert got[i] == _oracle_spans(text, artifacts), i
+    assert engine.process_text("We see M31.") == _oracle_spans("We see M31.", artifacts)
+
+
 def test_crf_feature_sink(tmp_path, artifacts):
     vocab, trie, _ = artifacts
     n = write_crf_features(

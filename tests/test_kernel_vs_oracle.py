@@ -145,3 +145,16 @@ def test_long_sequence_decode_matches_oracle(artifacts):
     ]
     assert got == want
     assert len(got) > 50  # the doc genuinely exercises decode
+
+
+def test_blank_name_gazetteer_matches_oracle(artifacts):
+    """A gazetteer whose names are all blank builds a trie with no
+    transitions; the kernel skips the gazetteer pass instead of indexing
+    an empty root table, and the CRF alone still finds both objects."""
+    from astrospark.lexicon import build_trie
+
+    vocab, _, model = artifacts
+    trie = build_trie(["", "  "])
+    spans = [{"kind": "text", "text": "We see NGC 1275 and M31 today.", "media_ref": "", "offset": 0}]
+    _check([{"doc_id": "blank_gaz", "spans": spans}], (vocab, trie, model))
+    assert [s["kind"] for s in process_document(spans, vocab, trie, model)] == ["object", "object"]

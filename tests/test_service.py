@@ -21,6 +21,7 @@ def server(artifacts):
     t.start()
     yield f"http://127.0.0.1:{srv.server_address[1]}"
     srv.shutdown()
+    srv.server_close()
 
 
 def _post(url, data, ctype="application/x-www-form-urlencoded"):
@@ -118,3 +119,17 @@ def test_blank_input_is_no_content(server):
 def test_health(server):
     with urllib.request.urlopen(server + "/health", timeout=10) as resp:
         assert json.loads(resp.read())["status"] == "ok"
+
+
+def test_concurrent_requests_equal_serial(server, request_texts, run_together):
+    """Concurrent requests share kernel calls; each still gets exactly the
+    answer it gets alone."""
+
+    def entities(text):
+        status, raw = _post(server, urllib.parse.urlencode({"text": text}))
+        assert status == 200
+        return json.loads(raw)["entities"]
+
+    serial = [entities(t) for t in request_texts]
+    assert any(serial)
+    assert run_together(entities, request_texts) == serial
