@@ -80,9 +80,7 @@ class AstroEngine:
         runs one ``extract_batch`` over every text queued so far. A batch
         is whatever arrived while the previous call ran (a lone request
         is a batch of one), so there is no timer and no size setting; the
-        call's time includes the wait for the lock. Kernel calls on one
-        engine run one at a time, which also keeps the model's lazily
-        built indexes from being filled by two threads at once."""
+        call's time includes the wait for the lock."""
         req = _Request(text)
         with self._queue_lock:
             self._pending.append(req)

@@ -10,7 +10,18 @@ Spark path.
 Model shape: for each feature template k (templates.py), a value→row-id dict
 and a dense (n_values+1, 3) weight matrix (last row = OOV/unseen → 0), plus a
 3×3 label-transition matrix (the template file's ``B`` line). Score of a
-label sequence y is sum_t emit[t, y_t] + sum_{t>0} T[y_{t-1}, y_t].
+label sequence y is sum_t emit[t, y_t] + sum_{t>0} T[y_{t-1}, y_t]. A
+compound template's values are tuples of its components' observation
+strings; the weights artifact stores them joined with SEP.
+
+The constructor compiles the scorer once per model into integer tables:
+one hashed ``pd.Index`` dictionary per base column (every value any
+template reads from that column, compound components included; BOUNDARY is
+id 0), one int LUT per single-column template from dictionary id to weight
+row, and each compound vocabulary key as an int64 mixed-radix number of its
+components' dictionary ids. ``emissions`` then probes each column's
+dictionary once per batch and works on integers from there. Nothing is
+filled in lazily afterwards, so concurrent callers can share one model.
 
 The shipped weights artifact (resources/weights.npz) is trained here with a
 seeded averaged structured perceptron on the synthetic annotated corpus
@@ -22,13 +33,28 @@ extraction), verified span-for-span against the scalar oracle.
 
 from __future__ import annotations
 
+import gc
+import itertools
+import math
+
 import numpy as np
 import pandas as pd
 
-from astrospark.templates import BOUNDARY, EVAL_PLAN, N_LABELS, TEMPLATES
+from astrospark.lexicon import hashed_index
+from astrospark.templates import BOUNDARY, EVAL_PLAN, INTERVAL_COL, N_LABELS, TEMPLATES
+
+# separator of compound values in the weights artifact. The reference's
+# feature lines are whitespace-separated and no token contains whitespace,
+# so its compound values never collide; here a value that does not split
+# back into one part per component is refused at load, which keeps every
+# compound value an exact tuple of its components.
+SEP = "\x1f"
+
+# the values of the positional interval column (INTERVAL_COL), by flag
+FLAG_VALUES = ("0", "1")
 
 # ---------------------------------------------------------------------------
-# template value construction (vectorized)
+# template value construction (training)
 # ---------------------------------------------------------------------------
 
 
@@ -52,33 +78,22 @@ def shift_within_sequences(col: np.ndarray, seq_ids: np.ndarray, d: int) -> np.n
     return out
 
 
-# separator for compound-template observation values; \x1f cannot appear in
-# tokens (it is not producible by the tokenizer's delimiters/runs ambiguity-free
-# join matters: '/' IS a valid single-char token)
-SEP = "\x1f"
-
-
-def template_values(cols: list[np.ndarray], seq_ids: np.ndarray) -> list[np.ndarray]:
-    """For each template, the (possibly compound) observation string per
-    position. Compound values are joined with SEP. (Training/oracle path —
-    inference uses the factorized fast path in CrfModel.emissions.)"""
-    values: list[np.ndarray] = []
+def template_values(cols: list, seq_ids: np.ndarray) -> list:
+    """For each template, the observation per position: a string for a
+    single-column template, a tuple of component strings for a compound
+    one. (Training path — inference uses CrfModel.emissions.)"""
+    values: list = []
     cols = [
         c if isinstance(c, np.ndarray) else np.asarray(c, dtype=object) for c in cols
     ]
     for _name, spec in TEMPLATES:
         parts = [shift_within_sequences(cols[c], seq_ids, d) for d, c in spec]
-        if len(parts) == 1:
-            values.append(parts[0])
-        else:
-            s = pd.Series(parts[0], dtype="object")
-            joined = s.str.cat([pd.Series(p, dtype="object") for p in parts[1:]], sep=SEP)
-            values.append(joined.to_numpy())
+        values.append(parts[0] if len(parts) == 1 else list(zip(*parts)))
     return values
 
 
 def shift_codes(codes: np.ndarray, seq_ids: np.ndarray, d: int) -> np.ndarray:
-    """Factorized-code variant of shift_within_sequences; -1 = boundary."""
+    """Integer-code variant of shift_within_sequences; -1 = boundary."""
     n = len(codes)
     if d == 0:
         return codes
@@ -101,402 +116,188 @@ def shift_codes(codes: np.ndarray, seq_ids: np.ndarray, d: int) -> np.ndarray:
 
 
 class CrfModel:
-    __slots__ = ("vocabs", "weights", "trans", "_indexes", "_ctab")
+    __slots__ = ("vocabs", "weights", "trans", "_dicts", "_luts", "_keys")
 
     def __init__(self, vocabs: list[dict], weights: list[np.ndarray], trans: np.ndarray):
+        """``vocabs[k]`` maps template k's values to weight rows 0..n-1 in
+        insertion order (as ``load`` and training build them); a compound
+        template's values are tuples of its component strings."""
         self.vocabs = vocabs
         self.weights = weights
         self.trans = trans
-        self._indexes: list[pd.Index] | None = None
-        self._ctab = None
-
-    def _vocab_index(self, k: int) -> pd.Index:
-        """Hash index over template k's observation vocabulary; position ==
-        weight row id (vocab dicts are insertion-ordered by id). Built once
-        per model — get_indexer then probes in C instead of dict.get per
-        value."""
-        if self._indexes is None:
-            self._indexes = [
-                pd.Index(np.fromiter(v.keys(), dtype=object, count=len(v)))
-                if v
-                else pd.Index(np.empty(0, dtype=object))
-                for v in self.vocabs
-            ]
-        return self._indexes[k]
-
-    def _compound_tables(self):
-        """Integer-key probe tables for the compound templates, built once
-        per model. Every compound vocab key is split on SEP into its
-        component observation strings (exactly len(spec) parts — verified;
-        any undecomposable key disables the tables and the scorer keeps the
-        string path). Components get dense ids from one shared index, and
-        each vocab key becomes a mixed-radix int64 (base B = #components+1,
-        leaving digit B-1 free as the not-in-any-vocab sentinel for batch
-        tokens never seen in training). A batch combo then matches a vocab
-        row iff its component ids match digit-for-digit — equivalent to the
-        string join+probe whenever batch components are SEP-free, which the
-        scorer checks per batch (see emissions).
-        """
-        if self._ctab is None:
-            comps: set[str] = {BOUNDARY}
-            split: dict[int, list[list[str]]] = {}
-            ok = True
-            for k, (_name, spec) in enumerate(TEMPLATES):
-                p = len(spec)
-                if p <= 1:
-                    continue
-                rows = []
-                for key in self.vocabs[k]:
-                    parts = key.split(SEP)
-                    if len(parts) != p:
-                        ok = False
-                        break
-                    rows.append(parts)
-                if not ok:
-                    break
-                split[k] = rows
-                for parts in rows:
-                    comps.update(parts)
-            if ok:
-                comp_index = pd.Index(np.array(sorted(comps), dtype=object))
-                B = len(comp_index) + 1
-                max_p = max((len(TEMPLATES[k][1]) for k in split), default=1)
-                # mixed-radix keys must fit int64
-                ok = B**max_p < 2**62
-            if ok:
-                boundary_cid = int(comp_index.get_loc(BOUNDARY))
-                key_idx: dict[int, pd.Index] = {}
-                for k, rows in split.items():
-                    if rows:
-                        p = len(rows[0])
-                        cids = (
-                            comp_index.get_indexer(
-                                np.array(rows, dtype=object).ravel()
-                            )
-                            .reshape(len(rows), p)
-                            .astype(np.int64)
-                        )
-                        keys = np.zeros(len(rows), dtype=np.int64)
-                        for j in range(p):
-                            keys = keys * B + cids[:, j]
-                        key_idx[k] = pd.Index(keys)
-                    else:
-                        key_idx[k] = pd.Index(np.empty(0, dtype=np.int64))
-                self._ctab = (comp_index, B, boundary_cid, key_idx)
-            else:
-                self._ctab = False
-        return self._ctab or None
+        # each template's values as an (n, len(spec)) object array
+        comps = [
+            np.fromiter(
+                v if len(spec) == 1 else itertools.chain.from_iterable(v),
+                dtype=object,
+                count=len(v) * len(spec),
+            ).reshape(len(v), len(spec))
+            for v, (_n, spec) in zip(vocabs, TEMPLATES)
+        ]
+        # one dictionary per base column: BOUNDARY (id 0), the values of the
+        # single-column templates reading it in first-seen order, then any
+        # compound component none of them has. In a trained model every
+        # component is also some position's single-column value, so the
+        # components (most of the values) are only probed, not factorized.
+        ids: dict[tuple[int, int], np.ndarray] = {}
+        self._dicts = {}
+        reads = [(k, j, c) for k, (_n, spec) in enumerate(TEMPLATES) for j, (_d, c) in enumerate(spec)]
+        for col in sorted({c for _k, _j, c in reads}):
+            mine = [(k, j) for k, j, c in reads if c == col]
+            singles = [comps[k][:, 0] for k, _j in mine if len(TEMPLATES[k][1]) == 1]
+            dic = hashed_index(pd.unique(np.concatenate([np.array([BOUNDARY], dtype=object), *singles])))
+            probes = [dic.get_indexer(comps[k][:, j]) for k, j in mine]
+            unseen = [comps[k][:, j][p < 0] for (k, j), p in zip(mine, probes)]
+            if any(len(u) for u in unseen):
+                dic = hashed_index(np.concatenate([dic.to_numpy(), pd.unique(np.concatenate(unseen))]))
+                probes = [dic.get_indexer(comps[k][:, j]) for k, j in mine]
+            self._dicts[col] = dic
+            for (k, j), p in zip(mine, probes):
+                ids[k, j] = p.astype(np.int64)
+        # single-column template: dictionary id → weight row (the extra
+        # last id, an unseen value, → the OOV row). Compound template: its
+        # vocabulary as int64 keys (position = weight row) and the radix of
+        # each component, one more than its dictionary size so the unseen
+        # id stays a digit of its own.
+        self._luts: list[np.ndarray | None] = []
+        self._keys: list[tuple[pd.Index, list[int]] | None] = []
+        for k, (vocab, (name, spec)) in enumerate(zip(vocabs, TEMPLATES)):
+            oov = len(vocab)
+            if len(spec) == 1:
+                lut = np.full(len(self._dicts[spec[0][1]]) + 1, oov, dtype=np.int64)
+                lut[ids[k, 0]] = np.arange(oov)
+                self._luts.append(lut)
+                self._keys.append(None)
+                continue
+            radixes = [len(self._dicts[c]) + 1 for _d, c in spec]
+            if math.prod(radixes) >= 2**63:
+                raise ValueError(f"compound keys of template {name} overflow int64")
+            key = np.zeros(oov, dtype=np.int64)
+            for j, r in enumerate(radixes):
+                key *= r
+                key += ids[k, j]
+            self._luts.append(None)
+            self._keys.append((hashed_index(key), radixes))
 
     def save(self, path: str) -> None:
         arrays: dict[str, np.ndarray] = {"trans": self.trans}
         for k, (vocab, w) in enumerate(zip(self.vocabs, self.weights)):
             vals = np.empty(len(vocab), dtype=object)
             for v, i in vocab.items():
-                vals[i] = v
+                vals[i] = v if isinstance(v, str) else SEP.join(v)
             arrays[f"vals_{k}"] = vals.astype("U")
             arrays[f"w_{k}"] = w.astype(np.float32)
         np.savez_compressed(path, **arrays)
 
     @classmethod
     def load(cls, path: str) -> "CrfModel":
+        """Read an artifact written by ``save``. A compound value that does
+        not split into one part per component is refused."""
         data = np.load(path, allow_pickle=False)
         vocabs, weights = [], []
-        for k in range(len(TEMPLATES)):
-            vals = data[f"vals_{k}"]
-            vocabs.append({str(v): i for i, v in enumerate(vals)})
-            weights.append(data[f"w_{k}"].astype(np.float32))
+        # ~50k compound tuples built with the collector on would run ~70
+        # young collections over the growing dicts and set off a full one
+        # (~50 ms in a service process); paused, one young collection
+        # afterwards finds them, as the tuples hold only strings
+        collecting = gc.isenabled()
+        gc.disable()
+        try:
+            for k, (_name, spec) in enumerate(TEMPLATES):
+                vals = data[f"vals_{k}"].tolist()
+                if len(spec) > 1:
+                    vals = [tuple(v.split(SEP)) for v in vals]
+                    bad = next((v for v in vals if len(v) != len(spec)), None)
+                    if bad is not None:
+                        raise ValueError(
+                            f"compound value {SEP.join(bad)!r} does not split into {len(spec)} parts"
+                        )
+                vocabs.append(dict(zip(vals, range(len(vals)))))
+                weights.append(data[f"w_{k}"].astype(np.float32))
+        finally:
+            if collecting:
+                gc.enable()
         return cls(vocabs, weights, data["trans"].astype(np.float32))
 
     # -- scoring ------------------------------------------------------------
 
-    def emissions(self, cols: list, seq_ids: np.ndarray) -> np.ndarray:
+    def emissions(
+        self, ucols: list, codes: np.ndarray, interval: np.ndarray, seq_ids: np.ndarray
+    ) -> np.ndarray:
         """(n, L) emission scores for a batch of concatenated sequences.
 
-        Fast path: each base column is factorized ONCE per batch; per
-        template the vocab lookup runs over the column's UNIQUE values
-        (a lookup table), then a single gather applies it to all n
-        positions — dict work is O(#unique) instead of O(n·#templates).
+        ``ucols[c]`` holds feature column c's value for each distinct token
+        of the batch and ``codes[t]`` is the distinct token at position t;
+        the positional interval column (INTERVAL_COL) comes as the
+        per-position bool ``interval`` instead. ``seq_ids`` groups the
+        positions into sequences (each sequence contiguous).
 
-        A ``cols`` entry may also be a tuple ``(per_unique_vals,
-        full_codes)`` — the kernel's unique-token path: the column's value
-        at position t is ``per_unique_vals[full_codes[t]]``. Factorization
-        then runs over the per-unique values (thousands) and reaches full
-        length with one int gather, never materializing n strings.
+        Each column's distinct values are probed against its dictionary
+        once (one ``get_indexer`` per column); everything after that works
+        on dictionary ids. Evaluation follows ``templates.EVAL_PLAN``:
 
-        Evaluation follows ``templates.EVAL_PLAN``: single-col templates
-        over token-derived columns are grouped by offset, and when every
-        such column arrives as a tuple sharing ONE ``full_codes`` array
-        (the kernel's unique-token path), each group pre-sums its members'
-        per-distinct-token weight tables (float64, ascending template
-        order) and expands the sum with a SINGLE length-n gather — one
-        big-n take+add per offset instead of one per template (~5x less
-        memory traffic; L is only 3, so the whole pass is bandwidth-bound).
-        The scalar oracle accumulates in the identical plan order, keeping
-        kernel ≡ oracle bit-exact (see EVAL_PLAN's docstring).
+        - an offset group pre-sums its members' weight rows per distinct
+          token (float64, ascending template order; the extra last row is
+          the members' summed BOUNDARY rows) and expands the sum with one
+          gather over the positions shifted by the group's offset;
+        - an interval template gathers from its three-row table;
+        - a compound template shifts each component's ids by that
+          component's offset (``shift_codes``, any offset), combines them
+          into int64 keys and probes its key index once.
+
+        Scores accumulate in float64 — matching the scalar oracle (and
+        Wapiti's C doubles); float32 sums drift enough over 50+ templates
+        and long Viterbi chains to flip near-tie decodes on
+        multi-thousand-token sequences (caught by giant-doc fuzz). The
+        oracle adds in the same plan order, so kernel ≡ oracle bit-exact.
         """
-        n = len(seq_ids)
-        # float64 accumulation — matches the scalar oracle (and Wapiti's C
-        # doubles); float32 sums drift enough over 50+ templates and long
-        # Viterbi chains to flip near-tie decodes on multi-thousand-token
-        # sequences (caught by giant-doc fuzz)
+        n = len(codes)
+        codes = np.asarray(codes, dtype=np.int64)
+        flags = np.asarray(interval, dtype=np.int64)
+        # dictionary id per distinct value, BOUNDARY's id 0 appended so a
+        # shifted code of -1 gathers it
+        ids: dict[int, np.ndarray] = {}
+        for c, dic in self._dicts.items():
+            vals = FLAG_VALUES if c == INTERVAL_COL else ucols[c]
+            x = dic.get_indexer(pd.Index(np.asarray(vals, dtype=object), dtype=object))
+            x[x < 0] = len(dic)
+            ids[c] = np.append(x, 0)
+        shifted: dict[tuple[bool, int], np.ndarray] = {}
+
+        def at(c: int, d: int) -> np.ndarray:
+            """Per position t, the code of column c's value at t+d, -1
+            outside the sequence."""
+            slot = (c == INTERVAL_COL, d)
+            if slot not in shifted:
+                shifted[slot] = shift_codes(flags if slot[0] else codes, seq_ids, d)
+            return shifted[slot]
+
         scores = np.zeros((n, N_LABELS), dtype=np.float64)
-        codes: dict[int, np.ndarray] = {}
-        uniques: dict[int, np.ndarray] = {}
-
-        def col_codes(c: int) -> np.ndarray:
-            if c not in codes:
-                if isinstance(cols[c], tuple):
-                    uvals, full_codes = cols[c]
-                    cd, un = pd.factorize(pd.Series(uvals))
-                    codes[c] = cd.astype(np.int64)[full_codes]
-                else:
-                    cd, un = pd.factorize(cols[c])
-                    codes[c] = cd.astype(np.int64)
-                uniques[c] = np.asarray(un, dtype=object)
-            return codes[c]
-
-        shifted: dict[tuple[int, int], np.ndarray] = {}
-
-        def get_shifted(d: int, c: int) -> np.ndarray:
-            key = (d, c)
-            if key not in shifted:
-                shifted[key] = shift_codes(col_codes(c), seq_ids, d)
-            return shifted[key]
-
-        ccodes: dict[int, np.ndarray | None] = {}
-        # canonical consecutive-run compound caches (see the compound
-        # branch): boundary-padded per-position component codes per column,
-        # and one factorized adjacent p-gram key array per (column, p)
-        canon_ext: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        canon_gram: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
-
-        def col_ccodes(c: int, ctab) -> np.ndarray | None:
-            """Column c's per-unique component ids for the compound
-            integer-key path (boundary id appended so shifted code -1
-            gathers it), or None when a batch value contains SEP — the
-            one case where string-join equality and componentwise
-            equality can diverge."""
-            if c not in ccodes:
-                col_codes(c)  # materialize uniques[c]
-                u = uniques[c]
-                comp_index, _B, boundary_cid, _ki = ctab
-                if len(u) and (
-                    pd.Series(u, dtype=object)
-                    .str.contains(SEP, regex=False)
-                    .to_numpy(dtype=bool)
-                    .any()
-                ):
-                    ccodes[c] = None
-                else:
-                    cid = comp_index.get_indexer(u).astype(np.int64)
-                    cid[cid < 0] = len(comp_index)  # unseen-token sentinel
-                    ccodes[c] = np.append(cid, np.int64(boundary_cid))
-            return ccodes[c]
-
-        # one reusable (n, L) float32 gather buffer for per-template takes
-        # — per-template temp allocations (6+ MB each) were ~45% of the
-        # single-template path (malloc + page faults), and np.take(out=)
-        # + in-place += is bit-identical to the allocating form (same
-        # values, same float64 accumulation order)
-        tmp = np.empty((n, N_LABELS), dtype=np.float32)
-
-        def single_into(k: int, d: int, c: int) -> None:
-            """Gather template k's weight rows for all n positions → tmp."""
-            vocab = self.vocabs[k]
-            w = self.weights[k]
-            oov = len(vocab)
-            sc = get_shifted(d, c)
-            lut = self._vocab_index(k).get_indexer(uniques[c])
-            lut[lut < 0] = oov
-            lut = np.append(lut, vocab.get(BOUNDARY, oov))  # code -1
-            # gather weights into a per-batch small table first: the
-            # big-n gather then hits a cache-resident (u+1, L) array
-            # (negative boundary codes index the appended last row —
-            # np.take supports them exactly like fancy indexing)
-            np.take(w[lut], sc, axis=0, out=tmp)
-
-        # shared-unique grouped path: every grouped column is a tuple over
-        # the SAME full_codes array (identity check — the kernel builds all
-        # 17 from one el_codes), so all members of an offset group share
-        # one shifted index and their tables can be pre-summed
-        group_cols = sorted(
-            {c for item in EVAL_PLAN if item[0] == "group" for _k, c in item[2]}
-        )
-        fast = bool(group_cols) and all(
-            isinstance(cols[c], tuple) for c in group_cols
-        )
-        if fast:
-            base_codes = cols[group_cols[0]][1]
-            fast = all(cols[c][1] is base_codes for c in group_cols[1:])
-        if fast:
-            n_uniq = len(cols[group_cols[0]][0])
-            base_codes = np.asarray(base_codes, dtype=np.int64)
-            tmp64 = np.empty((n, N_LABELS), dtype=np.float64)
-            ucodes: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-
-            def col_ucodes(c: int) -> tuple[np.ndarray, np.ndarray]:
-                # factorize the PER-UNIQUE column values (dedupes shapes/
-                # prefixes shared across distinct tokens) so each template's
-                # vocab probe runs over the smaller value set
-                if c not in ucodes:
-                    cd, un = pd.factorize(pd.Series(cols[c][0]))
-                    ucodes[c] = (cd.astype(np.int64), np.asarray(un, dtype=object))
-                return ucodes[c]
-
-            shifted_uid: dict[int, np.ndarray] = {}
-
-            def get_shifted_uid(d: int) -> np.ndarray:
-                if d not in shifted_uid:
-                    shifted_uid[d] = shift_codes(base_codes, seq_ids, d)
-                return shifted_uid[d]
-
+        buf64 = np.empty((n, N_LABELS), dtype=np.float64)
+        buf32 = np.empty((n, N_LABELS), dtype=np.float32)
         for item in EVAL_PLAN:
             if item[0] == "group":
-                d, members = item[1], item[2]
-                if fast:
-                    # per-distinct-token pre-sum: G[u] = sum over member
-                    # templates of their weight row for token u (float64,
-                    # ascending k); last row = the members' summed boundary
-                    # rows (all members share offset d, so positions are
-                    # jointly in-bounds or jointly boundary)
-                    grp = np.zeros((n_uniq + 1, N_LABELS), dtype=np.float64)
-                    for k, c in members:
-                        vocab = self.vocabs[k]
-                        w = self.weights[k]
-                        oov = len(vocab)
-                        cd, un = col_ucodes(c)
-                        lut = self._vocab_index(k).get_indexer(un)
-                        lut[lut < 0] = oov
-                        grp[:n_uniq] += w[lut[cd]]
-                        grp[n_uniq] += w[vocab.get(BOUNDARY, oov)]
-                    np.take(grp, get_shifted_uid(d), axis=0, out=tmp64)
-                    scores += tmp64
-                elif len(members) == 1:
-                    # no pre-sum to share — identical to the single path
-                    (k, c) = members[0]
-                    single_into(k, d, c)
-                    scores += tmp
-                else:
-                    part = np.zeros((n, N_LABELS), dtype=np.float64)
-                    for k, c in members:
-                        single_into(k, d, c)
-                        part += tmp
-                    scores += part
-                continue
-            if item[0] == "single":
+                _tag, d, members = item
+                grp = np.zeros((len(ids[members[0][1]]), N_LABELS), dtype=np.float64)
+                for k, c in members:
+                    grp += self.weights[k][self._luts[k][ids[c]]]
+                np.take(grp, at(members[0][1], d), axis=0, out=buf64)
+                scores += buf64
+            elif item[0] == "single":
                 _tag, k, d, c = item
-                single_into(k, d, c)
-                scores += tmp
-                continue
-            # compound templates
-            k = item[1]
-            _name, spec = TEMPLATES[k]
-            vocab = self.vocabs[k]
-            w = self.weights[k]
-            oov = len(vocab)
-            # integer-key fast path: probe the vocab with mixed-radix
-            # component-id keys instead of building join strings for every
-            # unique combo. Exact iff batch components are SEP-free (then
-            # string-join equality == componentwise equality); a SEP-bearing
-            # batch column falls back to the string path below.
-            ctab = self._compound_tables()
-            if ctab is not None:
-                # canonical consecutive-run sub-path: every shipped compound
-                # template is an adjacent p-gram of ONE column at some start
-                # offset d0 (bigrams at d0 ∈ {-2,-1,0,1}, trigrams at
-                # {-2,0}), so all of them are reads of ONE canonical
-                # adjacent-p-gram array at shifted positions. Build the
-                # column's component codes once with TWO boundary sentinels
-                # padded on each side of every sequence (offsets reach ±2,
-                # and pads of adjacent sequences compose to the correct
-                # all-boundary combos), form p-gram mixed-radix keys over
-                # the padded array, and factorize ONCE per (column, p) —
-                # replacing one full-length factorize PER TEMPLATE with one
-                # per gram order. Key values are identical digit-for-digit
-                # to the per-template combine (same ascending-offset radix
-                # order, same boundary id for out-of-range and NaN-coded
-                # positions), so the probed weight rows are bit-identical.
-                offs = [d for d, _c in spec]
-                cset = {c for _d, c in spec}
-                run_ok = len(cset) == 1 and offs == list(
-                    range(offs[0], offs[0] + len(spec))
-                )
-                cid_run = col_ccodes(next(iter(cset)), ctab) if run_ok else None
-                if cid_run is not None:
-                    c0, p, d0 = next(iter(cset)), len(spec), offs[0]
-                    _ci, B, bcid, key_idx = ctab
-                    if c0 not in canon_ext:
-                        change = np.empty(n, dtype=bool)
-                        change[0] = True
-                        change[1:] = seq_ids[1:] != seq_ids[:-1]
-                        rank = np.cumsum(change) - 1
-                        ext_pos = np.arange(n, dtype=np.int64) + 2 + 4 * rank
-                        m_ext = n + 4 * int(rank[-1] + 1)
-                        pext = np.full(m_ext, bcid, dtype=np.int64)
-                        pext[ext_pos] = cid_run[col_codes(c0)]
-                        canon_ext[c0] = (pext, ext_pos)
-                    pext, ext_pos = canon_ext[c0]
-                    if (c0, p) not in canon_gram:
-                        hi = len(pext) - p + 1
-                        comb = pext[:hi].copy()
-                        for j in range(1, p):
-                            comb *= B
-                            comb += pext[j : hi + j]
-                        inv, uk = pd.factorize(comb)
-                        canon_gram[(c0, p)] = (
-                            inv.astype(np.int64),
-                            np.asarray(uk, dtype=np.int64),
-                        )
-                    inv, uk = canon_gram[(c0, p)]
-                    row = key_idx[k].get_indexer(uk).astype(np.int64)
-                    row[row < 0] = oov
-                    np.take(w[row], inv[ext_pos + d0], axis=0, out=tmp)
-                    scores += tmp
-                    continue
-                cc = [col_ccodes(c, ctab) for _d, c in spec]
-                if all(x is not None for x in cc):
-                    comp_index, B, _bcid, key_idx = ctab
-                    comb = None
-                    for (d, c), cid_ext in zip(spec, cc):
-                        sc = get_shifted(d, c)
-                        pcode = cid_ext[sc]  # -1 hits the appended boundary id
-                        comb = pcode if comb is None else comb * B + pcode
-                    inv, ucomb = pd.factorize(comb)
-                    row = key_idx[k].get_indexer(np.asarray(ucomb, dtype=np.int64))
-                    row[row < 0] = oov
-                    np.take(w[row], inv, axis=0, out=tmp)
-                    scores += tmp
-                    continue
-            # string path (fallback): combine component codes into one
-            # integer key, dedupe, and build observation strings only for
-            # the unique combos
-            comb = None
-            bases = []
-            for d, c in spec:
-                sc = get_shifted(d, c)
-                b = len(uniques[c]) + 1
-                bases.append(b)
-                comb = (sc + 1) if comb is None else comb * b + (sc + 1)
-            # hash-based factorize beats sort-based np.unique here and
-            # uniqueness order is irrelevant (gather by inv either way)
-            inv, ucomb = pd.factorize(comb)
-            ucomb = np.asarray(ucomb, dtype=comb.dtype)
-            comps = []
-            rem = ucomb.copy()
-            for (d, c), b in zip(reversed(spec), reversed(bases)):
-                comps.append((rem % b - 1, c))
-                rem //= b
-            comps.reverse()
-            svals = None
-            for comp, c in comps:
-                u = uniques[c]
-                part = np.where(comp >= 0, u[np.clip(comp, 0, None)], BOUNDARY)
-                part = part.astype(object)
-                svals = part if svals is None else svals + SEP + part
-            lut = self._vocab_index(k).get_indexer(svals)
-            lut[lut < 0] = oov
-            np.take(w[lut], inv, axis=0, out=tmp)  # same buffer reuse
-            scores += tmp
+                table = self.weights[k][self._luts[k][ids[c]]]
+                np.take(table, at(c, d), axis=0, out=buf32)
+                scores += buf32
+            else:
+                k = item[1]
+                index, radixes = self._keys[k]
+                key = np.zeros(n, dtype=np.int64)
+                for (d, c), r in zip(TEMPLATES[k][1], radixes):
+                    key *= r
+                    key += ids[c][at(c, d)]
+                rows = index.get_indexer(key)
+                rows[rows < 0] = len(self.vocabs[k])
+                np.take(self.weights[k], rows, axis=0, out=buf32)
+                scores += buf32
         return scores
 
 
@@ -523,83 +324,54 @@ def viterbi_single(emit: np.ndarray, trans: np.ndarray) -> np.ndarray:
     return labels
 
 
-def viterbi_batched(emit: np.ndarray, seq_ids: np.ndarray, trans: np.ndarray,
-                    bucket_size: int = 512) -> np.ndarray:
-    """Decode all sequences in a concatenated batch.
+def viterbi_batched(emit: np.ndarray, seq_ids: np.ndarray, trans: np.ndarray) -> np.ndarray:
+    """Decode all sequences in a concatenated batch (3 labels).
 
-    Sequences are bucketed by length (after sorting) so padding waste stays
-    bounded even with heavy document-length skew; within a bucket the DP runs
-    as (S, L) numpy ops per time-step — python loops scale with max sequence
-    length, not token count.
+    Sequences are ordered by length, longest first, so the sequences still
+    running at step t are a prefix of that order: step t updates the
+    first ``alive[t]`` rows of the (S, 3) score array with one unrolled
+    3-label max, and back-pointers are stored per token. The backtrack
+    walks the same prefixes in reverse. Python loops scale with the
+    longest sequence, not with the token count, and nothing is padded.
     """
     n = len(seq_ids)
     if n == 0:
         return np.empty(0, dtype=np.int64)
-    # sequence boundaries (seq_ids grouped)
-    change = np.flatnonzero(np.diff(seq_ids)) + 1
-    starts = np.concatenate(([0], change))
-    ends = np.concatenate((change, [n]))
-    lengths = ends - starts
-    order = np.argsort(lengths, kind="stable")
+    starts = np.flatnonzero(np.concatenate(([True], seq_ids[1:] != seq_ids[:-1])))
+    lengths = np.diff(np.append(starts, n))
+    order = np.argsort(-lengths, kind="stable")
+    first, lens = starts[order], lengths[order]
+    t_max = int(lens[0])
+    # alive[t] = number of sequences longer than t
+    alive = np.cumsum(np.bincount(lens, minlength=t_max + 1)[::-1])[::-1][1:].tolist()
 
-    out = np.empty(n, dtype=np.int64)
-    transT = trans.astype(np.float64)  # f64 accumulation, same as viterbi_single
+    # unrolled 3-label max over cand[s,i,j] = delta[s,i] + trans[i,j], with
+    # argmax's first-max tie-break reproduced by strict > comparisons
+    # (lower previous label wins ties) — bit-identical to viterbi_single
+    t0c, t1c, t2c = trans.astype(np.float64)  # f64 accumulation
+    delta = emit[first].astype(np.float64)  # (S, L)
+    psi = np.empty((n, N_LABELS), dtype=np.int8)
+    for t in range(1, t_max):
+        m = alive[t]
+        pos = first[:m] + t
+        d = delta[:m]
+        v0 = d[:, 0:1] + t0c
+        v1 = d[:, 1:2] + t1c
+        v2 = d[:, 2:3] + t2c
+        p01 = v1 > v0
+        m01 = np.where(p01, v1, v0)
+        psi[pos] = np.where(v2 > m01, 2, p01)
+        delta[:m] = np.maximum(m01, v2) + emit[pos]
 
-    for b0 in range(0, len(order), bucket_size):
-        idx = order[b0 : b0 + bucket_size]
-        ls = lengths[idx]
-        S = len(idx)
-        Tmax = int(ls.max())
-        # gather into (S, Tmax, L) padded tensor
-        em = np.zeros((S, Tmax, N_LABELS), dtype=np.float64)
-        for si, qi in enumerate(idx):
-            em[si, : lengths[qi]] = emit[starts[qi] : ends[qi]]
-        delta = em[:, 0, :].copy()  # (S, L)
-        psi = np.zeros((S, Tmax, N_LABELS), dtype=np.int8)
-        active_len = ls
-        if N_LABELS == 3:
-            # unrolled 3-label max: the same cand[s,i,j] = delta[s,i] +
-            # trans[i,j] scalars, with argmax's first-max tie-break
-            # reproduced by strict > comparisons (lower prev index wins
-            # ties) — bit-identical to the generic path below
-            t0c, t1c, t2c = transT[0], transT[1], transT[2]
-            for t in range(1, Tmax):
-                v0 = delta[:, 0:1] + t0c
-                v1 = delta[:, 1:2] + t1c
-                v2 = delta[:, 2:3] + t2c
-                p01 = v1 > v0
-                m01 = np.where(p01, v1, v0)
-                best_prev = np.where(v2 > m01, 2, p01)
-                best_score = np.maximum(m01, v2)
-                new_delta = best_score + em[:, t, :]
-                alive = (active_len > t)[:, None]
-                delta = np.where(alive, new_delta, delta)
-                psi[:, t, :] = best_prev
-        else:
-            for t in range(1, Tmax):
-                cand = delta[:, :, None] + transT[None, :, :]  # (S, L, L)
-                best_prev = cand.argmax(axis=1)  # (S, L)
-                best_score = np.take_along_axis(cand, best_prev[:, None, :], axis=1)[:, 0, :]
-                new_delta = best_score + em[:, t, :]
-                alive = (active_len > t)[:, None]
-                delta = np.where(alive, new_delta, delta)
-                psi[:, t, :] = best_prev
-        last = delta.argmax(axis=1)  # (S,)
-        # backtrack (vectorized across the bucket)
-        labels_pad = np.zeros((S, Tmax), dtype=np.int64)
-        cur = last
-        t_idx = ls - 1
-        labels_pad[np.arange(S), t_idx] = cur
-        for t in range(Tmax - 1, 0, -1):
-            active = t_idx >= t
-            prev = psi[np.arange(S), t, cur]
-            cur = np.where(active, prev, cur)
-            pos = t - 1
-            write = active
-            labels_pad[np.arange(S)[write], pos] = cur[write]
-        for si, qi in enumerate(idx):
-            out[starts[qi] : ends[qi]] = labels_pad[si, : lengths[qi]]
-    return out
+    labels = np.empty(n, dtype=np.int64)
+    cur = delta.argmax(axis=1)  # each sequence's last label
+    labels[first + lens - 1] = cur
+    for t in range(t_max - 1, 0, -1):
+        m = alive[t]
+        pos = first[:m] + t
+        cur[:m] = psi[pos, cur[:m]]
+        labels[pos - 1] = cur[:m]
+    return labels
 
 
 # ---------------------------------------------------------------------------

@@ -80,8 +80,10 @@ def _get_artifacts(bcast):
     hit = _ARTIFACT_CACHE.get(key)
     if hit is None:
         from astrospark.crf import CrfModel
+        from astrospark.lexicon import vocab_index
 
         vocab, trie, vocabs, weights, trans = bcast.value
+        vocab_index(vocab)  # the kernel's gazetteer membership, built at load
         hit = (vocab, trie, CrfModel(vocabs, weights, trans))
         _ARTIFACT_CACHE.clear()  # one model live per worker
         _ARTIFACT_CACHE[key] = hit

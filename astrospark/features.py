@@ -28,58 +28,65 @@ reference but never addressed by any template line — they are dead features
 and are intentionally not computed on the hot path (scalar renditions live in
 oracle.py for documentation parity).
 
-All functions take/return pandas Series so a whole Arrow batch's tokens are
-processed in C loops — no per-token Python on the Spark path.
+The columns of a whole Arrow batch's tokens are computed with pyarrow
+compute kernels over one string array — no per-token Python on the Spark
+path.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 N_COLS = 18
 
-_ALLCAPS_RE = r"[A-Z]+"
-_ALLDIGIT_RE = r"[0-9]+"
+# RE2 patterns, anchored where the whole token must match
+_ALLCAPS_RE = r"^[A-Z]+$"
+_ALLDIGIT_RE = r"^[0-9]+$"
 _CONTAINS_DIGIT_RE = r"[0-9]"
-_INITCAP_RE = r"[A-Z].*"
+_INITCAP_RE = r"^[A-Z]"
 # token made entirely of punctuation-ish delimiter chars
-_ISPUNCT_RE = r"[\,\:;\?\.\!\(\)\[\]\"'`\*\-–−/<>=\+%\$\^‰°≈]+"
+_ISPUNCT_RE = r"^[\,\:;\?\.\!\(\)\[\]\"'`\*\-–−/<>=\+%\$\^‰°≈]+$"
 
 
-def compute_columns(
-    tokens: pd.Series, astro_name: np.ndarray, is_astro_token: np.ndarray | None
-) -> list:
-    """18 feature columns for a Series of (already normalized) token strings.
+def compute_columns(tokens, astro_name: np.ndarray, is_astro_token: np.ndarray | None) -> list:
+    """18 feature columns for a sequence of (already normalized) token
+    strings — a pandas Series (object or arrow-backed) or anything else
+    ``pa.array`` accepts.
 
     ``astro_name``/``is_astro_token``: boolean arrays aligned with ``tokens``.
-    String-valued columns are returned as pyarrow-backed Series (their str
-    kernels run in native code, 2-5x the object path); categorical columns
-    as numpy object arrays. Consumers (pd.factorize in CrfModel.emissions)
-    accept both.
+    Every column comes back as a numpy array, object-typed for the string
+    columns.
 
-    ``is_astro_token=None`` leaves cols[17] as None — used by the kernel's
-    unique-token fast path, where cols 0-16 are functions of the token
-    string (computed once per distinct token) while col 17 is positional
-    (interval membership) and is filled in full-length by the caller.
+    ``is_astro_token=None`` leaves cols[17] as None — used by the kernel,
+    where cols 0-16 are functions of the token string (computed once per
+    distinct token) while col 17 is positional (interval membership) and
+    is passed to the scorer per position.
     """
-    if not isinstance(tokens.dtype, pd.ArrowDtype):
-        s = tokens.astype("string[pyarrow]")
-    else:
-        s = tokens
-    cols: list = [None] * N_COLS
-    cols[0] = s
-    cols[1] = s.str.lower()
-    # prefixes / suffixes: TextUtilities.prefix/suffix semantics — whole
-    # string when shorter than k (str.slice already behaves that way).
-    for k in range(1, 6):
-        cols[1 + k] = s.str.slice(0, k)
-        cols[6 + k] = s.str.slice(-k)
+    s = pa.array(tokens, type=pa.string())
+    if isinstance(s, pa.ChunkedArray):
+        s = s.combine_chunks()
 
-    all_digit = s.str.fullmatch(_ALLDIGIT_RE).to_numpy(dtype=bool)
-    contains_digit = s.str.contains(_CONTAINS_DIGIT_RE, regex=True).to_numpy(dtype=bool)
-    all_caps = s.str.fullmatch(_ALLCAPS_RE).to_numpy(dtype=bool)
-    init_cap = s.str.match(_INITCAP_RE).to_numpy(dtype=bool)
+    def strings(arr) -> np.ndarray:
+        return arr.to_numpy(zero_copy_only=False)
+
+    def matches(pattern: str) -> np.ndarray:
+        return pc.match_substring_regex(s, pattern).to_numpy(zero_copy_only=False)
+
+    cols: list = [None] * N_COLS
+    cols[0] = strings(s)
+    cols[1] = strings(pc.utf8_lower(s))
+    # prefixes / suffixes: TextUtilities.prefix/suffix semantics — whole
+    # string when shorter than k (codepoint slicing clamps the same way).
+    for k in range(1, 6):
+        cols[1 + k] = strings(pc.utf8_slice_codeunits(s, 0, k))
+        cols[6 + k] = strings(pc.utf8_slice_codeunits(s, -k))
+
+    all_digit = matches(_ALLDIGIT_RE)
+    contains_digit = matches(_CONTAINS_DIGIT_RE)
+    all_caps = matches(_ALLCAPS_RE)
+    init_cap = matches(_INITCAP_RE)
 
     # capitalisation with the ALLDIGIT->NOCAPS override (printVector:74-77)
     cols[12] = np.select(
@@ -90,20 +97,22 @@ def compute_columns(
     cols[13] = np.select(
         [all_digit, contains_digit], ["ALLDIGIT", "CONTAINDIGIT"], default="NODIGIT"
     )
-    cols[14] = np.where(s.str.len().to_numpy(dtype=np.int64) == 1, "1", "0")
+    cols[14] = np.where(pc.utf8_length(s).to_numpy(zero_copy_only=False) == 1, "1", "0")
 
     # punctType ladder (addFeaturesAstro:162-178): generic PUNCT first, then
     # exact-char classes override.
-    is_punct = s.str.fullmatch(_ISPUNCT_RE).to_numpy(dtype=bool)
+    def one_of(chars) -> np.ndarray:
+        return pc.is_in(s, value_set=pa.array(chars)).to_numpy(zero_copy_only=False)
+
     cols[15] = np.select(
         [
-            s.isin(("(", "[")).to_numpy(dtype=bool),
-            s.isin((")", "]")).to_numpy(dtype=bool),
-            s.isin((".",)).to_numpy(dtype=bool),
-            s.isin((",",)).to_numpy(dtype=bool),
-            s.isin(("-",)).to_numpy(dtype=bool),
-            s.isin(('"', "'", "`")).to_numpy(dtype=bool),
-            is_punct,
+            one_of(["(", "["]),
+            one_of([")", "]"]),
+            one_of(["."]),
+            one_of([","]),
+            one_of(["-"]),
+            one_of(['"', "'", "`"]),
+            matches(_ISPUNCT_RE),
         ],
         ["OPENBRACKET", "ENDBRACKET", "DOT", "COMMA", "HYPHEN", "QUOTE", "PUNCT"],
         default="NOPUNCT",

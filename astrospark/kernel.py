@@ -2,10 +2,11 @@
 
 Processes a whole pandas batch of interleaved documents at once:
 tokenization via one vectorized megastring pass with arrow-side dedup
-(analyzer.tokenize_spans), feature
-columns via pandas str ops, emission scoring via per-template id maps +
-dense weight-table gathers, Viterbi batched across every sequence in the
-batch, and cluster/offset assembly from cumulative-sum char positions.
+(analyzer.tokenize_spans), feature columns via pyarrow compute kernels
+over the batch's distinct tokens, emission scoring against the integer
+tables the model compiled at load (crf.CrfModel), Viterbi batched across
+every sequence in the batch, cluster/offset assembly from cumulative-sum
+char positions, and one lexsort that orders the output rows.
 Per-document Python is limited to chunk bookkeeping and a per-CLUSTER
 (not per-token) offset walk that replicates the reference's pos
 arithmetic (/root/reference/src/main/java/org/grobid/core/engines/AstroParser.java:677-748),
@@ -24,11 +25,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from astrospark.analyzer import tokenize_spans
 from astrospark.crf import CrfModel, viterbi_batched
 from astrospark.features import compute_columns
-from astrospark.lexicon import _WS_TOKENS, flatten_trie
+from astrospark.lexicon import _WS_TOKENS, flatten_trie, vocab_index
 from astrospark.oracle import LINE_KINDS, TEXT_KINDS, is_blank, java_trim
 from astrospark.templates import LABEL_BEGIN, LABEL_OTHER
 from astrospark.unicode_norm import NORMALIZE_TABLE
@@ -37,17 +40,14 @@ from astrospark.unicode_norm import NORMALIZE_TABLE
 # split-document output exactly like the in-batch sort, then drops it.
 OUTPUT_COLUMNS = ("doc_id", "seq", "kind", "text", "media_ref", "offset", "end")
 
-_CTRL_EMPTY = None  # lazily compiled fullmatch for control-only strings
-
-
-def _control_only_mask(norm: pd.Series) -> np.ndarray:
-    """True where the normalized token java-trims to '' (skip it)."""
-    return norm.str.fullmatch("[\\x00-\\x20]*").to_numpy()
-
-
 def extract_batch(pdf: pd.DataFrame, vocab, trie, model: CrfModel) -> pd.DataFrame:
     """doc_id + spans batch → ordered output span rows (see OUTPUT_COLUMNS)."""
-    passthrough: list[tuple[int, str, str, str, int, int]] = []
+    # passthrough spans, column by column (each ends where it starts)
+    p_di: list[int] = []
+    p_kind: list[str] = []
+    p_text: list[str] = []
+    p_media: list[str] = []
+    p_offset: list[int] = []
     # processing units: (doc_idx, base_offset) per unit, texts list
     unit_doc: list[int] = []
     unit_base: list[int] = []
@@ -77,41 +77,58 @@ def extract_batch(pdf: pd.DataFrame, vocab, trie, model: CrfModel) -> pd.DataFra
                         unit_texts.append(line)
                     pos += len(line) + 1
             else:
-                passthrough.append(
-                    (di, kind, text, span["media_ref"] or "", offset, offset)
-                )
+                p_di.append(di)
+                p_kind.append(kind)
+                p_text.append(text)
+                p_media.append(span["media_ref"] or "")
+                p_offset.append(offset)
 
-    ent_rows: list[tuple[int, str, str, str, int, int]] = []
-    if unit_texts:
-        ent_rows = _process_units(unit_doc, unit_base, unit_texts, vocab, trie, model)
-
-    all_rows = passthrough + ent_rows
-    if not all_rows:
-        return pd.DataFrame(
-            {
-                "doc_id": pd.Series([], dtype="object"),
-                "seq": pd.Series([], dtype="int32"),
-                "kind": pd.Series([], dtype="object"),
-                "text": pd.Series([], dtype="object"),
-                "media_ref": pd.Series([], dtype="object"),
-                "offset": pd.Series([], dtype="int32"),
-                "end": pd.Series([], dtype="int32"),
-            }
-        )
-    out = pd.DataFrame(all_rows, columns=["di", "kind", "text", "media_ref", "offset", "end"])
+    e_di, e_text, e_start, e_end = _process_units(
+        unit_doc, unit_base, unit_texts, vocab, trie, model
+    )
+    m = len(p_di) + len(e_di)
+    di = np.array(p_di + e_di, dtype=np.int64)
+    start = np.array(p_offset + e_start, dtype=np.int64)
+    end = np.array(p_offset + e_end, dtype=np.int64)
+    kind = np.array(p_kind + ["object"] * len(e_di), dtype=object)
+    text = np.array(p_text + e_text, dtype=object)
+    media = np.array(p_media + [""] * len(e_di), dtype=object)
     # ordering invariant: (offset, offset_end) per AstroEntity.compareTo with
-    # deterministic tie-breaks; seq = dense rank within doc (oracle.py)
-    out.sort_values(["di", "offset", "end", "kind", "text", "media_ref"], inplace=True, kind="stable")
-    out["seq"] = out.groupby("di").cumcount().astype("int32")
-    out["doc_id"] = docs[out["di"].to_numpy()]
-    out["offset"] = out["offset"].astype("int32")
-    out["end"] = out["end"].astype("int32")
-    return out[list(OUTPUT_COLUMNS)].reset_index(drop=True)
+    # deterministic tie-breaks (kind, text, media_ref) — the oracle's tuple
+    # sort; strings sort by their rank among the batch's sorted distinct
+    # values. seq = rank within the doc's run of the sorted rows.
+    order = np.lexsort(
+        (_sort_rank(media), _sort_rank(text), _sort_rank(kind), end, start, di)
+    )
+    di = di[order]
+    run_first = np.flatnonzero(np.concatenate(([True], di[1:] != di[:-1])))
+    seq = np.arange(m) - np.repeat(run_first, np.diff(np.append(run_first, m)))
+    return pd.DataFrame(
+        {
+            "doc_id": docs[di] if m else np.empty(0, dtype=object),
+            "seq": seq.astype(np.int32),
+            "kind": kind[order],
+            "text": text[order],
+            "media_ref": media[order],
+            "offset": start[order].astype(np.int32),
+            "end": end[order].astype(np.int32),
+        }
+    )
+
+
+def _sort_rank(values: np.ndarray) -> np.ndarray:
+    """Each string's rank among the sorted distinct values."""
+    return pd.factorize(values, sort=True)[0]
 
 
 def _process_units(unit_doc, unit_base, unit_texts, vocab, trie, model):
     """Label all units' tokens in one vectorized pass, then assemble
-    entities with the per-cluster offset walk."""
+    entities with the per-cluster offset walk. Returns the objects' doc
+    indexes, texts, and char starts and ends, as four lists."""
+    e_di: list[int] = []
+    e_text: list[str] = []
+    e_start: list[int] = []
+    e_end: list[int] = []
     n_units = len(unit_texts)
     # batch tokenization: one megastring pass + arrow dictionary encode
     # (analyzer.tokenize_spans) — the unique-token fast path: every
@@ -124,7 +141,7 @@ def _process_units(unit_doc, unit_base, unit_texts, vocab, trie, model):
     tok_codes = batch.codes
     n = len(tok_codes)
     if n == 0:
-        return []
+        return e_di, e_text, e_start, e_end
     unit_ids = batch.unit_ids
     counts = np.bincount(unit_ids, minlength=n_units)
     unit_starts = np.concatenate(([0], np.cumsum(counts)))[:-1]
@@ -202,9 +219,13 @@ def _process_units(unit_doc, unit_base, unit_texts, vocab, trie, model):
 
     # eligibility (AstroParser.addFeatures:632-642) — per unique token
     is_space = (uniq_arr == " ")[tok_codes]
-    uniq_norm = uniq_ser.str.translate(NORMALIZE_TABLE).astype("string[pyarrow]")
+    uniq_norm = pa.array(uniq_ser.str.translate(NORMALIZE_TABLE), type=pa.string())
+    # a normalized token that java-trims to '' is skipped
+    control_only = pc.match_substring_regex(uniq_norm, "^[\\x00-\\x20]*$")
     u_eligible = (
-        (uniq_arr != " ") & (uniq_arr != "\n") & ~_control_only_mask(uniq_norm)
+        (uniq_arr != " ")
+        & (uniq_arr != "\n")
+        & ~control_only.to_numpy(zero_copy_only=False)
     )
     eligible = u_eligible[tok_codes]
 
@@ -212,17 +233,14 @@ def _process_units(unit_doc, unit_base, unit_texts, vocab, trie, model):
     labels = np.zeros(n, dtype=np.int64)
     if len(elig_idx):
         el_codes = tok_codes[elig_idx]
-        u_astro = uniq_ser.isin(vocab).to_numpy(dtype=bool)
+        u_astro = vocab_index(vocab).get_indexer(uniq_arr) >= 0
         ucols = compute_columns(uniq_norm, u_astro, None)
-        cols: list = [(ucols[c], el_codes) for c in range(17)]
-        cols.append(np.where(in_interval[elig_idx], "1", "0"))
         seq_ids = unit_ids[elig_idx]
-        emit = model.emissions(cols, seq_ids)
+        emit = model.emissions(ucols, el_codes, in_interval[elig_idx], seq_ids)
         labels[elig_idx] = viterbi_batched(emit, seq_ids, model.trans)
 
     # cluster boundaries over eligible tokens (TaggingTokenClusteror
     # semantics): begin-label or core change or unit start
-    rows: list[tuple[int, str, str, str, int, int]] = []
     elig_unit = unit_ids[elig_idx] if len(elig_idx) else np.empty(0, dtype=np.int64)
     elig_labels = labels[elig_idx] if len(elig_idx) else np.empty(0, dtype=np.int64)
     cores = (elig_labels != LABEL_OTHER).astype(np.int8)
@@ -326,7 +344,9 @@ def _process_units(unit_doc, unit_base, unit_texts, vocab, trie, model):
             if end_pos > 0 and L >= end_pos and text[end_pos - 1] == " ":
                 end_pos -= 1
             if core_l[j]:
-                raw = java_trim(text[cs_l[j] : ce_l[j]])
-                rows.append((di, "object", raw, "", base + pos, base + end_pos))
+                e_di.append(di)
+                e_text.append(java_trim(text[cs_l[j] : ce_l[j]]))
+                e_start.append(base + pos)
+                e_end.append(base + end_pos)
             pos = end_pos
-    return rows
+    return e_di, e_text, e_start, e_end

@@ -23,9 +23,11 @@ our gazetteer and, when available, the reference lexicon file.
 
 Scale design: the trie (plain nested dicts) and the vocabulary frozenset
 are built ONCE on the driver and shipped to executors as a Spark
-broadcast; inside the Arrow kernel only tokens that are trie roots are
-scanned (vectorized candidate pre-filter), so the per-batch cost is
-O(#tokens) dict lookups + O(#candidates · match-depth).
+broadcast. Each process turns them into integer tables once
+(``vocab_index`` at load, ``flatten_trie`` on first use); inside the
+Arrow kernel only tokens that are trie roots are scanned (vectorized candidate pre-filter), so the
+per-batch cost is O(#distinct tokens) hash probes + O(#candidates ·
+match-depth).
 """
 
 from __future__ import annotations
@@ -148,16 +150,50 @@ def interval_bitmap(n_tokens: int, positions: list[tuple[int, int]]):
 
 @lru_cache(maxsize=4)
 def load_artifacts(path: str | None = None):
-    """(vocab frozenset, trie dict) for a gazetteer file — cached per process."""
+    """(vocab frozenset, trie dict) for a gazetteer file — cached per
+    process, with the kernel's membership index built here."""
     names = load_names(path)
-    return build_vocab(names), build_trie(names)
+    vocab = build_vocab(names)
+    vocab_index(vocab)
+    return vocab, build_trie(names)
 
 
-# flattened-trie cache for the kernel's vectorized descent — one live
-# trie per worker process (same lifecycle as engine._ARTIFACT_CACHE);
-# the trie object itself is kept as the cache key's referent so the
-# id() can never be recycled while the entry is alive
+def hashed_index(values):
+    """``pd.Index`` over unique ``values`` with its hash table built now.
+    pandas otherwise fills it on the first lookup, and two threads making
+    that first lookup at once can see a half-built table
+    (``InvalidIndexError``), so an index shared between callers is
+    published only after this."""
+    import pandas as pd
+
+    idx = pd.Index(values)
+    if not idx.is_unique:  # builds the table
+        raise ValueError("index values must be unique")
+    return idx
+
+
+# the kernel's tables per gazetteer — one live vocab and one live trie
+# per worker process (same lifecycle as engine._ARTIFACT_CACHE); each
+# object is kept as its cache key's referent so the id() can never be
+# recycled while the entry is alive, and an entry is published only
+# once complete
+_VOCAB_CACHE: dict[int, tuple] = {}
 _FLAT_CACHE: dict[int, tuple] = {}
+
+
+def vocab_index(vocab: frozenset):
+    """Hashed ``pd.Index`` over the token-membership set: the kernel
+    reads column 16 (astroName) for a batch's distinct tokens with one
+    ``get_indexer`` against it."""
+    import numpy as np
+
+    hit = _VOCAB_CACHE.get(id(vocab))
+    if hit is not None and hit[0] is vocab:
+        return hit[1]
+    index = hashed_index(np.fromiter(vocab, dtype=object, count=len(vocab)))
+    _VOCAB_CACHE.clear()
+    _VOCAB_CACHE[id(vocab)] = (vocab, index)
+    return index
 
 
 def flatten_trie(trie: dict):
@@ -175,7 +211,6 @@ def flatten_trie(trie: dict):
     a re-interpretation; kernel ≡ scalar-oracle fuzz pins it.
     """
     import numpy as np
-    import pandas as pd
 
     hit = _FLAT_CACHE.get(id(trie))
     if hit is not None and hit[0] is trie:
@@ -201,7 +236,7 @@ def flatten_trie(trie: dict):
     # child id of edge e is the BFS insertion order: root is 0, then
     # children append in edge order — so edge e's child id is e + 1
     n_edges = len(edges_parent)
-    alph = pd.Index(np.unique(np.array(edges_tok, dtype=object)))
+    alph = hashed_index(np.unique(np.array(edges_tok, dtype=object)))
     A = len(alph)
     tok_ids = alph.get_indexer(np.array(edges_tok, dtype=object)).astype(np.int64)
     parents = np.array(edges_parent, dtype=np.int64)
@@ -210,7 +245,7 @@ def flatten_trie(trie: dict):
     root_child = np.full(A, -1, dtype=np.int64)
     root_mask = parents == 0
     root_child[tok_ids[root_mask]] = children[root_mask]
-    trans_index = pd.Index(keys)
+    trans_index = hashed_index(keys)
     is_end = np.array(is_end_l, dtype=bool)
     tables = (alph, A, root_child, trans_index, children, is_end)
     _FLAT_CACHE.clear()

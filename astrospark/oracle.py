@@ -26,7 +26,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from astrospark.analyzer import tokenize
-from astrospark.crf import SEP, CrfModel, viterbi_single
+from astrospark.crf import CrfModel, viterbi_single
 from astrospark.lexicon import match_positions
 from astrospark.templates import (
     BOUNDARY,
@@ -176,42 +176,48 @@ def label_sequence(tokens: list[str], vocab: frozenset, trie: dict, model: CrfMo
         return [], []
 
     cols_per_tok = [scalar_columns(w, a, p) for w, (a, p) in zip(words, flags)]
-    T = len(eligible)
+    emit = emission_scores(cols_per_tok, model)
+    labels = viterbi_single(emit, model.trans.astype(np.float64))
+    return eligible, labels.tolist()
+
+
+def emission_scores(cols_per_tok: list[list[str]], model: CrfModel) -> np.ndarray:
+    """(T, L) emission scores of one sequence from its per-token feature
+    columns, one template lookup at a time. A compound template's value is
+    the tuple of its components (BOUNDARY outside the sequence).
+
+    Accumulation follows templates.EVAL_PLAN — offset-grouped singles sum
+    into a float64 partial first (ascending template order), then group
+    partials / remaining templates add in plan order. The vectorized
+    scorer (crf.CrfModel.emissions) pre-sums the same groups per distinct
+    token, so both sides perform the identical float64 operations and
+    stay bit-exact."""
+    T = len(cols_per_tok)
     n_labels = len(model.trans)
+
+    def value(q: int, c: int) -> str:
+        return cols_per_tok[q][c] if 0 <= q < T else BOUNDARY
+
     emit = np.zeros((T, n_labels), dtype=np.float64)
-    # accumulation follows templates.EVAL_PLAN — offset-grouped singles sum
-    # into a float64 partial first (ascending template order), then group
-    # partials / remaining templates add in plan order. The vectorized
-    # scorer (crf.CrfModel.emissions) pre-sums the same groups per distinct
-    # token, so both sides perform the identical float64 operations and
-    # stay bit-exact (the invariant the old per-template order maintained).
     for t in range(T):
         for item in EVAL_PLAN:
             if item[0] == "group":
                 d, members = item[1], item[2]
-                q = t + d
                 part = np.zeros(n_labels, dtype=np.float64)
                 for k, c in members:
-                    val = cols_per_tok[q][c] if 0 <= q < T else BOUNDARY
-                    row = model.vocabs[k].get(val, len(model.vocabs[k]))
+                    row = model.vocabs[k].get(value(t + d, c), len(model.vocabs[k]))
                     part += model.weights[k][row]
                 emit[t] += part
                 continue
             if item[0] == "single":
                 _tag, k, d, c = item
-                q = t + d
-                val = cols_per_tok[q][c] if 0 <= q < T else BOUNDARY
+                val = value(t + d, c)
             else:
                 k = item[1]
-                parts = []
-                for d, c in TEMPLATES[k][1]:
-                    q = t + d
-                    parts.append(cols_per_tok[q][c] if 0 <= q < T else BOUNDARY)
-                val = SEP.join(parts)
+                val = tuple(value(t + d, c) for d, c in TEMPLATES[k][1])
             row = model.vocabs[k].get(val, len(model.vocabs[k]))
             emit[t] += model.weights[k][row]
-    labels = viterbi_single(emit, model.trans.astype(np.float64))
-    return eligible, labels.tolist()
+    return emit
 
 
 # ---------------------------------------------------------------------------

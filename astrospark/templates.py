@@ -104,14 +104,14 @@ N_LABELS = 3
 BOUNDARY = "\x00B"
 
 # column 17 is the FastMatcher interval flag — the only feature column
-# that is NOT a function of the token string (it is positional), so it is
-# excluded from the shared-unique-token emission fast path
+# that is NOT a function of the token string (it is positional), so the
+# scorer reads it per position rather than per distinct token
 INTERVAL_COL = 17
 
 
-def _build_eval_plan() -> tuple:
+def build_eval_plan(templates) -> tuple:
     """Shared emission evaluation order for the vectorized scorer AND the
-    scalar oracle (oracle.label_sequence).
+    scalar oracle (oracle.emission_scores).
 
     Single-column templates over token-string-derived columns are grouped
     by row offset (ascending); within a group, templates keep ascending
@@ -133,7 +133,7 @@ def _build_eval_plan() -> tuple:
     groups: dict[int, list[tuple[int, int]]] = {}
     interval_singles: list[tuple] = []
     multis: list[tuple] = []
-    for k, (_name, spec) in enumerate(TEMPLATES):
+    for k, (_name, spec) in enumerate(templates):
         if len(spec) > 1:
             multis.append(("multi", k))
         else:
@@ -148,4 +148,4 @@ def _build_eval_plan() -> tuple:
     return tuple(plan)
 
 
-EVAL_PLAN = _build_eval_plan()
+EVAL_PLAN = build_eval_plan(TEMPLATES)

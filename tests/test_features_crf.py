@@ -1,20 +1,22 @@
 """Feature columns: vectorized vs scalar equivalence; CRF decode + artifact."""
 
+from itertools import product
+
 import numpy as np
 import pandas as pd
 import pytest
 
+from astrospark import crf, oracle
 from astrospark.crf import (
     CrfModel,
     shift_codes,
     shift_within_sequences,
-    template_values,
     viterbi_batched,
     viterbi_single,
 )
 from astrospark.features import compute_columns
-from astrospark.oracle import scalar_columns
-from astrospark.templates import BOUNDARY, N_LABELS, TEMPLATES
+from astrospark.oracle import emission_scores, scalar_columns
+from astrospark.templates import BOUNDARY, N_LABELS, TEMPLATES, build_eval_plan
 
 TOKENS = [
     "GRB", "020819B", "the", "detect", "(", ")", "[", "]", ".", ",", "-",
@@ -55,7 +57,7 @@ def test_viterbi_batched_matches_single():
     emits = [rng.normal(size=(T, N_LABELS)).astype(np.float32) for T in lengths]
     seq_ids = np.repeat(np.arange(len(lengths)), lengths)
     flat = np.concatenate(emits)
-    batched = viterbi_batched(flat, seq_ids, trans, bucket_size=4)
+    batched = viterbi_batched(flat, seq_ids, trans)
     pos = 0
     for T, em in zip(lengths, emits):
         single = viterbi_single(em.astype(np.float64), trans.astype(np.float64))
@@ -63,24 +65,26 @@ def test_viterbi_batched_matches_single():
         pos += T
 
 
-def test_emissions_fast_path_matches_template_values(artifacts):
-    """The factorized LUT scorer must equal the string-join scorer."""
+def _assert_emissions_match_oracle(model, toks, seq_ids, interval, astro=("GRB", "NGC")):
+    """Kernel emissions over the batch's distinct tokens equal the
+    oracle's per-sequence template lookups, bit for bit."""
+    toks = np.asarray(toks, dtype=object)
+    uniq, codes = np.unique(toks, return_inverse=True)
+    ucols = compute_columns(pd.Series(uniq, dtype="object"), np.isin(uniq, astro), None)
+    got = model.emissions(ucols, codes, interval, seq_ids)
+    for s in np.unique(seq_ids):
+        idx = np.flatnonzero(seq_ids == s)
+        cols = [scalar_columns(toks[i], toks[i] in astro, bool(interval[i])) for i in idx]
+        assert np.array_equal(got[idx], emission_scores(cols, model)), s
+
+
+def test_emissions_match_oracle(artifacts):
+    """The compiled scorer equals the scalar oracle on a mixed batch."""
     _, _, model = artifacts
     rng = np.random.default_rng(2)
     toks = [TOKENS[i] for i in rng.integers(0, len(TOKENS), size=60)]
-    an = rng.random(60) < 0.3
-    ia = rng.random(60) < 0.3
-    cols = compute_columns(pd.Series(toks, dtype="object"), an, ia)
     seq_ids = np.sort(rng.integers(0, 5, size=60))
-    fast = model.emissions(cols, seq_ids)
-    values = template_values(cols, seq_ids)
-    slow = np.zeros_like(fast)
-    for k, vals in enumerate(values):
-        vocab, w = model.vocabs[k], model.weights[k]
-        oov = len(vocab)
-        ids = np.array([vocab.get(v, oov) for v in vals], dtype=np.int64)
-        slow += w[ids]
-    assert np.allclose(fast, slow, atol=1e-4)
+    _assert_emissions_match_oracle(model, toks, seq_ids, rng.random(60) < 0.3)
 
 
 def test_model_artifact_roundtrip(tmp_path, artifacts):
@@ -94,40 +98,72 @@ def test_model_artifact_roundtrip(tmp_path, artifacts):
         assert np.allclose(a, b)
 
 
-def test_compound_int_path_matches_string_path(artifacts):
-    """The mixed-radix integer compound probe must be bit-identical to the
-    string-join probe, including the NaN→boundary factorize quirk and the
-    SEP-bearing-token fallback."""
+def test_compound_keys_match_oracle_tuples(artifacts):
+    """Compound templates score tokens unseen in training and tokens that
+    contain the artifact's separator exactly like the oracle's component
+    tuples: a SEP-bearing component never matches a vocabulary key."""
     _, _, model = artifacts
-    assert model._compound_tables() is not None  # shipped vocabs decompose
     rng = np.random.default_rng(3)
-    n = 80
-    toks = np.array(["alpha", "beta", "NGC", "1275", "SDSS"], dtype=object)
-    col0 = toks[rng.integers(0, len(toks), n)].astype(object)
-    col0[7] = np.nan  # factorize code -1: boundary on both paths
-    cols = [col0] + [np.array(["x"] * n, dtype=object) for _ in range(17)]
-    seq = np.zeros(n, dtype=np.int64)
+    pool = np.array(["alpha", "beta", "NGC", "1275", "SDSS", "zzqx", "a\x1fb", "a", "b"], dtype=object)
+    toks = pool[rng.integers(0, len(pool), 80)]
+    seq = np.zeros(80, dtype=np.int64)
     seq[40:] = 1
-    e_int = model.emissions(cols, seq)
-    model._ctab = False
-    try:
-        e_str = model.emissions(cols, seq)
-    finally:
-        model._ctab = None
-    assert np.array_equal(e_int, e_str)
+    seq[70:] = 2
+    _assert_emissions_match_oracle(model, toks, seq, rng.random(80) < 0.5)
 
-    # a SEP inside a token makes join-equality ambiguous — the scorer must
-    # fall back to the string path (and therefore stay equal to it)
-    col0_sep = col0.copy()
-    col0_sep[3] = "a\x1fb"
-    cols[0] = col0_sep
-    e_int2 = model.emissions(cols, seq)
-    model._ctab = False
-    try:
-        e_str2 = model.emissions(cols, seq)
-    finally:
-        model._ctab = None
-    assert np.array_equal(e_int2, e_str2)
+
+SYNTH_TEMPLATES = (
+    ("U04", ((0, 0),)),
+    ("UG2", ((0, 17),)),
+    ("X3", ((-3, 0), (-2, 0), (-1, 0))),
+    ("X2", ((3, 0), (-4, 0))),
+    ("XC", ((-1, 1), (2, 12))),
+)
+
+
+def test_compound_offsets_beyond_two_match_oracle(monkeypatch):
+    """Compound templates at any offsets — beyond ±2, out of order, across
+    two columns — score like the oracle's tuple lookup, including at
+    sequence edges where components fall outside the sequence."""
+    rng = np.random.default_rng(8)
+    alphabet = ["a", "b", "c", "NGC", BOUNDARY]
+    vocabs = [
+        {key: row for row, key in enumerate(keys)}
+        for keys in (
+            ["a", "b", "NGC"],
+            ["0", "1", BOUNDARY],
+            [g for g in product(alphabet, repeat=3) if g != ("a", "a", "a")],
+            list(product(alphabet, repeat=2)),
+            [("a", "NOCAPS"), ("ngc", "ALLCAPS"), (BOUNDARY, "NOCAPS"), ("b", BOUNDARY)],
+        )
+    ]
+    weights = [rng.normal(size=(len(v) + 1, N_LABELS)).astype(np.float32) for v in vocabs]
+    for w in weights:
+        w[-1] = 0.0
+    trans = rng.normal(size=(N_LABELS, N_LABELS)).astype(np.float32)
+    plan = build_eval_plan(SYNTH_TEMPLATES)
+    for mod in (crf, oracle):
+        monkeypatch.setattr(mod, "TEMPLATES", SYNTH_TEMPLATES)
+        monkeypatch.setattr(mod, "EVAL_PLAN", plan)
+    model = CrfModel(vocabs, weights, trans)
+    lens = [1, 2, 3, 4, 5, 9, 30]
+    seq = np.repeat(np.arange(len(lens)), lens)
+    toks = np.array(["a", "b", "c", "d", "NGC"], dtype=object)[rng.integers(0, 5, len(seq))]
+    _assert_emissions_match_oracle(model, toks, seq, rng.random(len(seq)) < 0.5)
+
+
+def test_load_refuses_unsplittable_compound_key(tmp_path, artifacts):
+    """An artifact whose compound value does not split into one part per
+    component cannot be scored by components, so loading it fails."""
+    _, _, model = artifacts
+    p = str(tmp_path / "w.npz")
+    model.save(p)
+    data = dict(np.load(p))
+    k = next(i for i, (_n, spec) in enumerate(TEMPLATES) if len(spec) == 2)
+    data[f"vals_{k}"] = np.array(["one\x1ftwo\x1fthree"] + data[f"vals_{k}"].tolist()[1:])
+    np.savez(p, **data)
+    with pytest.raises(ValueError, match="does not split"):
+        CrfModel.load(p)
 
 
 def test_viterbi_unrolled_tie_breaks_match_scalar():
@@ -145,6 +181,23 @@ def test_viterbi_unrolled_tie_breaks_match_scalar():
         got = viterbi_batched(emit, seq, trans)
         starts = np.concatenate(([0], np.cumsum(lens)))[:-1]
         pos = 0
+        for s, ln in zip(starts, lens):
+            single = viterbi_single(emit[s : s + ln], trans.astype(np.float64))
+            assert np.array_equal(got[s : s + ln], single)
+
+
+def test_viterbi_ties_with_equal_and_unit_lengths():
+    """Many sequences of equal length, and length-1 sequences, under
+    exact score ties: the length-ordered prefix decode keeps every
+    sequence's own labels and argmax's first-max tie-break."""
+    rng = np.random.default_rng(4)
+    trans = rng.integers(-1, 2, (N_LABELS, N_LABELS)).astype(np.float32)
+    for lens in ([1] * 12, [4] * 20 + [1] * 5, [1, 7, 7, 1, 7, 3, 3, 1, 7]):
+        lens = np.array(lens)
+        seq = np.repeat(np.arange(len(lens)), lens)
+        emit = rng.integers(-2, 3, (len(seq), N_LABELS)).astype(np.float64)
+        got = viterbi_batched(emit, seq, trans)
+        starts = np.concatenate(([0], np.cumsum(lens)))[:-1]
         for s, ln in zip(starts, lens):
             single = viterbi_single(emit[s : s + ln], trans.astype(np.float64))
             assert np.array_equal(got[s : s + ln], single)

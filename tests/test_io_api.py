@@ -109,6 +109,39 @@ def test_process_text_concurrent_first_calls(artifacts, request_texts, run_toget
         sys.setswitchinterval(interval)
 
 
+def test_extract_batch_concurrent_on_fresh_model(artifacts, request_texts, run_together):
+    """Eight threads released at once call the kernel directly, without
+    the engine's lock, on a freshly loaded model and gazetteer; each gets
+    the serial answer, because every table the kernel looks up is built
+    before anyone can use it."""
+    import sys
+
+    import pandas as pd
+
+    from astrospark import kernel
+    from astrospark.crf import CrfModel
+    from astrospark.lexicon import build_trie, build_vocab, load_names
+    from astrospark.train import WEIGHTS_PATH
+
+    def spans(arts, text):
+        pdf = pd.DataFrame(
+            {"doc_id": [0], "spans": [[{"kind": "text", "text": text, "media_ref": "", "offset": 0}]]}
+        )
+        return kernel.extract_batch(pdf, *arts).to_dict("records")
+
+    serial = [spans(artifacts, t) for t in request_texts]
+    assert any(serial)
+    names = load_names()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for _ in range(3):  # each fresh model and gazetteer is one chance for a race
+            fresh = (build_vocab(names), build_trie(names), CrfModel.load(WEIGHTS_PATH))
+            assert run_together(lambda t: spans(fresh, t), request_texts) == serial
+    finally:
+        sys.setswitchinterval(interval)
+
+
 def _call_behind_held_kernel(engine, texts, monkeypatch, run_together, fail_marker=None):
     """Wrap ``kernel.extract_batch`` to count each call's docs and to raise
     on any batch containing ``fail_marker``. One call holds the kernel

@@ -158,3 +158,38 @@ def test_blank_name_gazetteer_matches_oracle(artifacts):
     spans = [{"kind": "text", "text": "We see NGC 1275 and M31 today.", "media_ref": "", "offset": 0}]
     _check([{"doc_id": "blank_gaz", "spans": spans}], (vocab, trie, model))
     assert [s["kind"] for s in process_document(spans, vocab, trie, model)] == ["object", "object"]
+
+
+def test_separator_bearing_text_matches_oracle(artifacts):
+    """Tokens containing the weights artifact's compound separator
+    (``\\x1f``) next to gazetteer names: compound templates compare
+    component tuples, so such a token never matches a vocabulary key."""
+    texts = [
+        "GRB\x1f020819B and NGC 1275 near a\x1fb",
+        "\x1f NGC 1275 \x1fM 31\x1f",
+        "x\x1fy\x1fz GRB 030329 \x1f\x1f",
+    ]
+    docs = [
+        {"doc_id": f"s{i}{kind}", "spans": [{"kind": kind, "text": t, "media_ref": "", "offset": 2}]}
+        for i, t in enumerate(texts)
+        for kind in ("text", "table")
+    ]
+    _check(docs, artifacts)
+
+
+def test_unseen_tokens_match_oracle(artifacts):
+    """Tokens the model never saw in training, alone and around known
+    names, at sequence starts and ends."""
+    rng = np.random.default_rng(5)
+    unseen = ["Zxqvw", "qqq9z", "ÆØÅ", "日本語", "ξψζ", "Qwerty123Uiop"]
+    known = ["GRB 020819B", "NGC 1275", "M 31", "the", "at"]
+    docs = []
+    for i in range(40):
+        words = [
+            (unseen if rng.random() < 0.6 else known)[rng.integers(0, 5)]
+            for _ in range(rng.integers(1, 12))
+        ]
+        docs.append(
+            {"doc_id": f"u{i}", "spans": [{"kind": "text", "text": " ".join(words), "media_ref": "", "offset": 0}]}
+        )
+    _check(docs, artifacts)
