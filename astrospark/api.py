@@ -19,14 +19,12 @@ reference's per-JVM singletons (AstroParser.java:67-81).
 from __future__ import annotations
 
 import threading
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, SparkSession
+from astrospark.train import load_default_artifacts
 
-from astrospark.engine.extraction import (
-    broadcast_artifacts,
-    extract_spans,
-    load_default_artifacts,
-)
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 
 class _Request:
@@ -43,8 +41,8 @@ class _Request:
 class AstroEngine:
     """``spark`` is created LAZILY: the single-request path
     (``process_text``, the service endpoint) runs the kernel driver-side
-    and must not pay a JVM spin-up; the session + broadcast materialize on
-    the first cluster-scale call."""
+    and must not pay a JVM spin-up or the pyspark import; the session +
+    broadcast materialize on the first cluster-scale call."""
 
     def __init__(self, spark: SparkSession | None = None, artifacts=None):
         self._spark = spark
@@ -65,6 +63,8 @@ class AstroEngine:
     @property
     def bcast(self):
         if self._bcast is None:
+            from astrospark.engine.extraction import broadcast_artifacts
+
             self._bcast = broadcast_artifacts(self.spark, self.artifacts)
         return self._bcast
 
@@ -147,6 +147,8 @@ class AstroEngine:
 
     def process_docs(self, docs: DataFrame, **kwargs) -> DataFrame:
         """Interleaved docs table → spans table (the scale path)."""
+        from astrospark.engine.extraction import extract_spans
+
         return extract_spans(docs, self.bcast, **kwargs)
 
     def process_documents_table(self, documents: DataFrame, **kwargs) -> DataFrame:

@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from astrospark.train import load_default_artifacts
+
 # kernel emits an internal exclusive char-end used for exact re-ranking of
 # split documents; the engine drops it from the public output
 KERNEL_SCHEMA = (
@@ -41,30 +43,6 @@ OUTPUT_COLUMNS = ("doc_id", "seq", "kind", "text", "media_ref", "offset")
 
 # worker-side cache: broadcast id -> unpacked artifacts
 _ARTIFACT_CACHE: dict = {}
-
-
-def load_default_artifacts():
-    """(vocab, trie, model) from the packaged resources — driver side.
-
-    Uses importlib.resources when the on-disk path is absent so the same
-    code works with astrospark shipped as a zip via spark-submit
-    --py-files (np.load accepts the file-like resource stream)."""
-    import os
-
-    from astrospark.crf import CrfModel
-    from astrospark.lexicon import load_artifacts
-    from astrospark.train import WEIGHTS_PATH
-
-    vocab, trie = load_artifacts()
-    if os.path.exists(WEIGHTS_PATH):
-        model = CrfModel.load(WEIGHTS_PATH)
-    else:
-        import io
-        from importlib import resources
-
-        blob = (resources.files("astrospark") / "resources" / "weights.npz").read_bytes()
-        model = CrfModel.load(io.BytesIO(blob))  # np.load needs a seekable stream
-    return vocab, trie, model
 
 
 def broadcast_artifacts(spark, artifacts=None):

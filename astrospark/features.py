@@ -25,8 +25,7 @@ address it by index:
 
 Columns 18-20 (shadowNumber/wordShape/wordShapeTrimmed) are emitted by the
 reference but never addressed by any template line — they are dead features
-and are intentionally not computed on the hot path (scalar renditions live in
-oracle.py for documentation parity).
+and are not computed.
 
 The columns of a whole Arrow batch's tokens are computed with pyarrow
 compute kernels over one string array — no per-token Python on the Spark

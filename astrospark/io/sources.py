@@ -6,8 +6,8 @@ jars the same fixed schema is read from parquet — the engine code is
 format-agnostic (`spark.read.format(...)`), and every scan benefits from
 Catalyst column pruning + predicate pushdown either way.
 
-S5: spans sink (parquet/iceberg) + `to_json` only at the API edge,
-mirroring the reference's hand-built JSON response
+S5: `to_json` only at the API edge, mirroring the reference's hand-built
+JSON response
 (/root/reference/src/main/java/org/grobid/core/data/AstroEntity.java:198-236).
 """
 
@@ -40,11 +40,6 @@ def read_docs_jsonl(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(DOCS_SCHEMA_DDL).json(path)
 
 
-def write_docs_jsonl(docs: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Round-trip sink for the interleaved docs schema."""
-    docs.write.mode(mode).json(path)
-
-
 def documents_to_docs(documents: DataFrame) -> DataFrame:
     """Adapt the driver's flat documents(doc_id, text, ...) table to the
     interleaved docs schema: one single text chunk per document at offset 0
@@ -59,31 +54,6 @@ def documents_to_docs(documents: DataFrame) -> DataFrame:
                 F.lit(0).alias("offset"),
             )
         ).alias("spans"),
-    )
-
-
-def write_spans(spans: DataFrame, target: str, fmt: str = "parquet", mode: str = "append") -> None:
-    spans.write.format(fmt).mode(mode).save(target)
-
-
-def write_spans_bucketed(
-    spans: DataFrame, table: str, n_buckets: int = 256, mode: str = "overwrite"
-) -> None:
-    """Persist spans as a doc_id-bucketed table.
-
-    At 10^12-doc scale, downstream per-document joins (spans ⋈ docs,
-    spans ⋈ media features, incremental reconciliation) are the dominant
-    shuffles; writing both sides bucketed by ``doc_id`` with the same
-    bucket count lets Spark plan those joins with NO Exchange on either
-    side (see tests/test_plans.py::test_bucketed_join_has_no_exchange).
-    Iceberg's ``bucket(N, doc_id)`` partition transform is the
-    catalog-native equivalent."""
-    (
-        spans.write.format("parquet")
-        .mode(mode)
-        .bucketBy(n_buckets, "doc_id")
-        .sortBy("doc_id", "seq")
-        .saveAsTable(table)
     )
 
 

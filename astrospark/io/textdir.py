@@ -1,18 +1,9 @@
-"""Batch directory source + CRF feature-file sink (SURVEY.md §2.1 S4/S7,
-§2.3 T5).
+"""Batch directory source (SURVEY.md §2.1 S4).
 
 S4 — directory of ``*.txt`` files → docs DataFrame (the reference's
      createTrainingBatch walks *.pdf/*.txt dirs, AstroParser.java:426-477;
-     PDF parse is upstream of this engine, txt is native).
-T5 — blank-line-delimited paragraph split, each paragraph one sequence
-     (createTrainingText, AstroParser.java:489-528): paragraph lines are
-     joined with '\\n' then newlines normalize to spaces downstream.
-S7 — feature-matrix sink in CRF++/Wapiti text format (token-per-line,
-     space-separated columns, blank line between sequences) — the
-     reference's training interchange (AstroTrainer.createCRFPPData,
-     AstroTrainer.java:84-312). The engine itself never round-trips
-     through this format (it scores from Arrow batches); the sink exists
-     for training-data interchange and debug parity.
+     PDF parse is upstream of this engine, txt is native). Each
+     blank-line-delimited paragraph becomes one text chunk.
 """
 
 from __future__ import annotations
@@ -21,22 +12,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def paragraphs_of_text(text: str) -> list[str]:
-    """T5: blank-line-delimited paragraphs; intra-paragraph lines joined
-    with '\\n' exactly like the reference's accumulator loop."""
-    paras: list[str] = []
-    buf: list[str] = []
-    lines = text.split("\n")
-    for i, line in enumerate(lines):
-        line = line.strip()
-        if line:
-            buf.append(line + "\n")
-        if (not line or i == len(lines) - 1) and buf:
-            paras.append("".join(buf))
-            buf = []
-    return paras
 
 
 def read_text_dir(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -67,41 +42,3 @@ def read_text_dir(spark: SparkSession, input_dir: str) -> DataFrame:
             "x -> length(trim(x.text)) > 0)"
         ).alias("spans"),
     )
-
-
-def feature_matrix_lines(tokens: list[str], vocab, trie) -> list[str]:
-    """S7: one CRF++-format feature line per eligible token (the 18
-    effective columns, space-separated), blank-line terminated."""
-    from astrospark.lexicon import interval_bitmap, match_positions
-    from astrospark.oracle import java_trim, scalar_columns
-    from astrospark.unicode_norm import normalize_and_remove_spaces
-
-    positions = match_positions(tokens, trie)
-    bitmap = interval_bitmap(len(tokens), positions)
-    lines = []
-    for i, tok in enumerate(tokens):
-        if tok in (" ", "\n"):
-            continue
-        w = normalize_and_remove_spaces(tok)
-        if java_trim(w) == "":
-            continue
-        cols = scalar_columns(w, tok in vocab, bool(bitmap[i]))
-        lines.append(" ".join(cols))
-    lines.append("")
-    return lines
-
-
-def write_crf_features(texts: list[str], path: str, vocab, trie) -> int:
-    """Dump sequences in Wapiti/CRF++ train format; returns #sequences."""
-    from astrospark.analyzer import tokenize
-
-    n = 0
-    with open(path, "w", encoding="utf-8") as fh:
-        for text in texts:
-            toks = tokenize(text.replace("\n", " ").replace("\t", " "))
-            if not toks:
-                continue
-            for line in feature_matrix_lines(toks, vocab, trie):
-                fh.write(line + "\n")
-            n += 1
-    return n

@@ -774,11 +774,8 @@ def screen_batch(
     artifact: ``batch`` is (doc_id, text) to verify; ``index_sig`` is the
     corpus's minhash signature table (``minhash_signature`` output —
     computed once at ingest and persisted / stored as a table, NOT
-    recomputed per batch). This is the entry point both the contract
-    query (which derives the index from the deterministic split) and the
-    streaming foreachBatch path (which reuses ONE persisted signature
-    frame across every micro-batch) call — one implementation, so the
-    drained stream's verdicts equal the batch operator's row-for-row.
+    recomputed per batch). The contract query derives the index from
+    the deterministic split and calls this core with it.
     """
     sig_new = scoped_persist(minhash_signature(batch))
     bands_idx = _minhash_bands(index_sig).withColumnRenamed("doc_id", "idx_id")

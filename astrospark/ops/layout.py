@@ -134,76 +134,6 @@ def zorder_cells_sql() -> str:
     )
 
 
-def write_zordered(
-    df: DataFrame, path: str, key_col: F.Column, n_files: int
-) -> None:
-    """The layout write: range-partition by the key (so each output
-    file covers a contiguous key range — for a z-key, a rectangle of
-    the dim space) and sort within partitions so parquet row-group
-    min/max stay tight. This is exactly what table-format OPTIMIZE
-    ZORDER does, expressed with stock DataFrame ops."""
-    (
-        df.withColumn("_zk", key_col)
-        .repartitionByRange(n_files, "_zk")
-        .sortWithinPartitions("_zk")
-        .drop("_zk")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-COMPACT_TARGET_BYTES = 128 * 1024 * 1024  # the usual HDFS/S3 block target
-
-
-def compact_parquet(
-    spark: SparkSession,
-    in_dir: str,
-    out_dir: str,
-    target_bytes: int = COMPACT_TARGET_BYTES,
-    sort_col: str | None = None,
-) -> dict:
-    """Small-file compaction: rewrite a directory of parquet files into
-    ceil(total_bytes / target_bytes) files of ~target size — the
-    operational fix for the small-files problem every streaming /
-    incremental ingest creates (each micro-batch appends a file; a
-    100 TB table ingested in 1 MB dribbles is 10^8 files, and file
-    OPEN cost starts to dominate scans — see
-    streaming/extract_stream.py's sink note).
-
-    Spark-idiomatic: the file inventory comes from the driver-side
-    listing (bounded metadata, same discipline as checkpoint commit
-    reads), the rewrite is ONE job — read → repartition(n_out) [or
-    repartitionByRange(sort_col) to also restore clustering, composing
-    with write_zordered's layout] → write. Row set is preserved
-    exactly (asserted in tests/test_layout_zorder.py). Table formats do
-    this incrementally with bin-packing + a transactional swap; on raw
-    parquet the atomic-rename directory swap is the caller's move.
-
-    Returns {files_in, files_out, bytes_total, n_target}.
-    """
-    import glob as _glob
-    import os as _os
-
-    files = sorted(_glob.glob(f"{in_dir}/part-*.parquet")) or sorted(
-        _glob.glob(f"{in_dir}/*.parquet")
-    )
-    bytes_total = sum(_os.path.getsize(f) for f in files)
-    n_out = max(1, -(-bytes_total // target_bytes))
-    df = spark.read.parquet(in_dir)
-    if sort_col is not None:
-        df = df.repartitionByRange(n_out, sort_col).sortWithinPartitions(sort_col)
-    else:
-        df = df.repartition(n_out)
-    df.write.mode("overwrite").parquet(out_dir)
-    files_out = len(_glob.glob(f"{out_dir}/part-*.parquet"))
-    return {
-        "files_in": len(files),
-        "files_out": files_out,
-        "bytes_total": bytes_total,
-        "n_target": n_out,
-    }
-
-
 def footer_stats(spark: SparkSession, path: str, col: str) -> dict:
     """count/min/max of a parquet column answered from FOOTER METADATA,
     no row scan: Spark's DSv2 parquet reader pushes whole-table
@@ -314,108 +244,3 @@ def contiguous_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     SinglePartition anywhere; plan-pinned)."""
     d = _t(spark, sf_dir, "documents").select("doc_id")
     return assign_contiguous_ids(d, "doc_id").select("doc_id", "seq")
-
-
-def cost_balanced_repartition(
-    df: DataFrame, weight_col: str, order_col: str, n_parts: int
-) -> DataFrame:
-    """Repartition so every partition carries ~equal total WEIGHT (not
-    equal row count) — the straggler fix for per-row cost skew. Equal-
-    row partitioning of a skewed corpus (one 10 MB document among 4 KB
-    ones; extraction cost ~ doc length) leaves one task running long
-    after the rest of the stage drained; here each task gets roughly
-    total_weight / n_parts of work instead.
-
-    Same bounded prefix-sum machinery as assign_contiguous_ids: range-
-    repartition on ``order_col`` (unique key — makes the global cumsum
-    well-defined), per-partition WEIGHT SUMS to the driver (n_parts
-    rows of metadata), prefix-sum into offsets, broadcast back, and
-    bucket every row by its exclusive-cumsum start:
-    bucket = cum_before div ceil(total / n_parts). The final exchange
-    places bucket i on partition i exactly via hash-inverse salts (see
-    below). No single-partition stage anywhere. (AQE's REBALANCE hint
-    is the bytes-based sibling — it splits oversized shuffle blocks by
-    SIZE; this op balances an arbitrary cost column, e.g. extraction
-    cost ~ n_chars, which bytes don't proxy once rows are wide-skewed.)
-
-    A row is never split, so one row heavier than the target still owns
-    its bucket alone — the bound is max(partition_load) <= target +
-    max_single_weight, which is the best any row-atomic partitioner
-    can do (tests/test_layout_zorder.py asserts it on a pathological
-    corpus).
-    """
-    spark = df.sparkSession
-    from astrospark.ops.caching import scoped_persist
-
-    ranged = scoped_persist(
-        df.repartitionByRange(n_parts, order_col)
-        .sortWithinPartitions(order_col)
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    sums = sorted(
-        (r["_pid"], r["w"])
-        for r in ranged.groupBy("_pid")
-        .agg(F.sum(weight_col).cast("long").alias("w"))
-        .collect()
-    )
-    offsets, acc = [], 0
-    for pid, w in sums:
-        offsets.append((pid, acc))
-        acc += w
-    target = max(1, -(-acc // n_parts))  # ceil(total / n_parts)
-    odf = spark.createDataFrame(offsets, "_pid int, _offset long")
-    w_local = (
-        F.sum(F.col(weight_col).cast("long")).over(
-            Window.partitionBy("_pid")
-            .orderBy(order_col)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        - F.col(weight_col).cast("long")
-    )
-    bucketed = (
-        ranged.join(F.broadcast(odf), "_pid")
-        .withColumn("_cum", w_local + F.col("_offset"))
-        .withColumn("_bucket", F.expr(f"_cum div {target}"))
-        .drop("_pid", "_offset", "_cum")
-    )
-    # Neither stock shuffle places ~n_parts known bucket ids one-per-
-    # partition: hash-repartition collides buckets (measured: two heavy
-    # buckets sharing a partition re-creates the skew), and range-
-    # repartition samples boundaries by ROW count, merging a heavy-but-
-    # few-rows bucket into its neighbor. So invert the hash: for each
-    # bucket pick a salt with pmod(murmur3(salt), n_parts) == bucket
-    # (found once on a tiny spark.range — driver metadata) and shuffle
-    # on the salt; placement becomes the identity, deterministically.
-    salts = _hash_inverse_salts(spark, n_parts)
-    sdf = spark.createDataFrame(
-        [(b, s) for b, s in salts.items()], "_bucket long, _salt int"
-    )
-    return (
-        bucketed.join(F.broadcast(sdf), "_bucket")
-        .repartition(n_parts, "_salt")
-        .drop("_bucket", "_salt")
-    )
-
-
-def _hash_inverse_salts(spark: SparkSession, n_parts: int) -> dict:
-    """For every partition index 0..n_parts-1, a small int whose
-    Murmur3 hash lands on it under HashPartitioning — computed with
-    Spark's own F.hash so the probe and the shuffle agree bit-for-bit.
-    Candidate pool grows until every partition is covered (coupon-
-    collector: ~n ln n candidates suffice; start at 16n)."""
-    k = max(64, n_parts * 16)
-    while True:
-        rows = (
-            spark.range(k)
-            .select(
-                F.col("id").cast("int").alias("s"),
-                F.pmod(F.hash(F.col("id").cast("int")), F.lit(n_parts)).alias("p"),
-            )
-            .collect()
-        )
-        best: dict = {}
-        for r in rows:
-            best.setdefault(r["p"], r["s"])
-        if len(best) == n_parts:
-            return best
-        k *= 4

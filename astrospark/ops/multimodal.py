@@ -17,7 +17,6 @@ real and tested.
 
 from __future__ import annotations
 
-import hashlib
 import struct
 from typing import Iterator
 
@@ -37,7 +36,6 @@ DECODED_SCHEMA_DDL = (
     "n_frames int, mean_luma double"
 )
 
-FEATURE_DIM = 16
 _MAGIC = b"ASTF"
 
 
@@ -168,30 +166,6 @@ def decode_media(media: DataFrame) -> DataFrame:
     return media.mapInPandas(fn, schema=DECODED_SCHEMA_DDL)
 
 
-def media_features(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
-    """content bytes → deterministic feature vector (stand-in for a real
-    embedding model; batch path shape identical to the real thing).
-
-    The per-item loop is intentional: sha256 over a variable-length blob
-    (like the real per-item model forward pass it stands in for) has no
-    batch formulation — the Arrow batch boundary is where the
-    vectorization win lives (one Python invocation per thousands of rows,
-    zero-copy columnar transfer), not inside the digest."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_refs, out_vecs = [], []
-            for r in pdf.itertuples():
-                digest = hashlib.sha256(bytes(r.content)).digest()
-                raw = np.frombuffer((digest * ((dim * 4) // len(digest) + 1))[: dim * 4], dtype=np.uint32)
-                vec = (raw.astype(np.float64) / np.iinfo(np.uint32).max * 2 - 1).astype(np.float32)
-                out_refs.append(r.media_ref)
-                out_vecs.append(vec.tolist())
-            yield pd.DataFrame({"media_ref": out_refs, "feature": out_vecs})
-
-    return media.mapInPandas(fn, schema="media_ref string, feature array<float>")
-
-
 def resize_plan(media: DataFrame, max_side: int = 224) -> DataFrame:
     """Pure-plan resize: computes target dims JVM-side (no UDF) — the
     actual pixel work would happen in the decode kernel at the new dims.
@@ -271,12 +245,3 @@ def m_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_multimodal.py)."""
     dec = decode_media(media_table(spark, n=200, seed=13))
     return dec.withColumn("mean_luma", F.round("mean_luma", 4))
-
-
-def docs_media_join(spans: DataFrame, media_feats: DataFrame) -> DataFrame:
-    """Attach media features to extraction output rows that anchor media —
-    broadcast join when the media side is dimension-sized."""
-    m = media_feats.withColumnRenamed("media_ref", "mref")
-    return spans.filter(F.col("media_ref") != "").join(
-        F.broadcast(m), spans["media_ref"] == m["mref"], "left"
-    ).drop("mref")

@@ -1158,9 +1158,7 @@ def decon_eval_frame(emb_df: DataFrame) -> DataFrame:
     screen: quantized components + precomputed squared norm. Eval
     membership is deterministic (``vec_id % EVAL_STRIDE == 0``) so the
     oracle replays it. Benchmark-sized by nature (10^2-10^5 rows), so
-    every consumer broadcasts it; the streaming twin persists it once
-    and reuses it across micro-batches (the stored-eval-table shape at
-    scale)."""
+    every consumer broadcasts it."""
     q = quantize(F.col("embedding").cast("array<double>"))
     return emb_df.filter(F.col("vec_id") % EVAL_STRIDE == 0).select(
         F.col("vec_id").alias("eval_id"),
@@ -1174,9 +1172,9 @@ def decon_eval_frame(emb_df: DataFrame) -> DataFrame:
 
 
 def screen_decontaminate(train_emb: DataFrame, eval_frame: DataFrame) -> DataFrame:
-    """The decontamination screen core, shared by the batch contract
-    row and the streaming twin: per training vector, the max quantized
-    cosine against the (broadcast) eval frame plus the threshold flag.
+    """The decontamination screen core of the contract row: per
+    training vector, the max quantized cosine against the (broadcast)
+    eval frame plus the threshold flag.
     Verdicts are per-vector given the eval frame — no train x train
     interaction — so the screen composes over arbitrary input splits
     (micro-batches) with no state; ties on the ROUNDED score break to
@@ -1238,9 +1236,7 @@ def semantic_decontaminate(spark, sf_dir) -> DataFrame:
     ``quantize``) make every dot/norm exact in any summation order, so
     Spark's long fold and DuckDB's ``list_dot_product`` agree bit-for-
     bit. At 10^12 training rows the broadcast-probe + partial-agg plan
-    is optimal: zero corpus-sized shuffles (see the core's docstring);
-    the streaming twin (``streaming.incremental``) runs the same core
-    per micro-batch against one persisted eval frame."""
+    is optimal: zero corpus-sized shuffles (see the core's docstring)."""
     e = _emb(spark, sf_dir)
     return screen_decontaminate(
         e.filter(F.col("vec_id") % EVAL_STRIDE != 0), decon_eval_frame(e)
@@ -1258,14 +1254,11 @@ def build_ann_index(
     10^12-vector deployment trains ONCE and probes forever, per the
     kmeans_cells/pq_codes docstrings and VERDICT r3's plan audit).
 
-    Four tables:
+    Three tables:
 
     - ``cells.parquet`` — (vec_id, cell, rnk) coarse-quantizer ranking
       (rnk=1 is membership; a query row's rnk ≤ nprobe is its probe
       list).
-    - ``centroids.parquet`` — (cid, qc) trained coarse centroids
-      (N_CENTROIDS rows) — what a NEW query vector scores against to
-      pick its probe cells (``ann_ivfadc_topk_vector``).
     - ``codebooks.parquet`` — (m, code, qc) trained PQ codewords
       (m·k rows; broadcast-sized by construction).
     - ``codes_by_cell.parquet`` — the compressed payload (vec_id, m,
@@ -1280,7 +1273,7 @@ def build_ann_index(
     ``ann_ivfadc_topk_indexed`` returns bit-identical results.
 
     ``meta.parquet`` records the build parameters (max_rank, m, k); the
-    probe entry points validate against it, so a ``nprobe`` deeper than
+    probe validates against it, so a ``nprobe`` deeper than
     the stored ranking or an ``m`` different from the build-time PQ
     split fails loudly instead of silently probing fewer cells / joining
     the wrong codebooks (ADVICE r4)."""
@@ -1289,9 +1282,6 @@ def build_ann_index(
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/meta.parquet")
     cells = kmeans_cells(spark, sf_dir, max_rank=max_rank)
     cells.write.mode("overwrite").parquet(f"{index_dir}/cells.parquet")
-    kmeans_centroids(spark, sf_dir).write.mode("overwrite").parquet(
-        f"{index_dir}/centroids.parquet"
-    )
     cents = pq_codebooks(spark, sf_dir, m=m, k=k)
     cents.write.mode("overwrite").parquet(f"{index_dir}/codebooks.parquet")
     member = cells.filter(F.col("rnk") == 1).select("vec_id", "cell")
@@ -1304,7 +1294,7 @@ def build_ann_index(
     )
 
 
-def _validate_index_params(spark, index_dir: str, nprobe: int, m: int | None) -> None:
+def _validate_index_params(spark, index_dir: str, nprobe: int, m: int) -> None:
     """Fail loudly when a probe's parameters exceed / mismatch what
     build_ann_index stored (ADVICE r4: a deeper nprobe used to probe at
     most the stored max_rank cells with no error, and a differing m
@@ -1322,7 +1312,7 @@ def _validate_index_params(spark, index_dir: str, nprobe: int, m: int | None) ->
             f"depth max_rank={built_rank}; rebuild with build_ann_index("
             f"..., max_rank>={nprobe})"
         )
-    if m is not None and m != built_m:
+    if m != built_m:
         raise ValueError(
             f"m={m} does not match the index's build-time PQ split "
             f"m={built_m}; codebook join would be wrong"
@@ -1373,70 +1363,6 @@ def ann_ivfadc_topk_indexed(
         spark.read.parquet(f"{index_dir}/codes_by_cell.parquet")
         .filter(F.col("cell").isin([int(c) for c in probe]))
         .filter(F.col("vec_id") != query_vec_id)
-    )
-    return (
-        codes.join(F.broadcast(table), ["m", "code"])
-        .groupBy("vec_id")
-        .agg(F.sum("qd").cast("bigint").alias("adist"))
-        .orderBy(F.asc("adist"), F.asc("vec_id"))
-        .limit(TOP_K)
-    )
-
-
-def ann_ivfadc_topk_vector(
-    spark, index_dir: str, query_vec, nprobe: int = 1
-) -> DataFrame:
-    """Probe a ``build_ann_index`` output with a NEW query vector — the
-    production shape (queries are fresh embeddings, not corpus rows;
-    FAISS's ``index.search`` semantics). No corpus table is touched at
-    all: the probe needs only the four index tables.
-
-    Driver-side work is bounded by INDEX METADATA, never corpus size —
-    exactly how a FAISS coarse probe works: quantize the query
-    (identical floor(x·1000) to the Spark side), score the N_CENTROIDS
-    stored centroids with the same qdot/sqrt(|c|²) ranking and (score
-    desc, cid asc) tie-break as ``kmeans_cells``, build the m·k ADC
-    distance table from the stored codebooks as exact ints. The
-    cluster-side plan is then one statically-pruned scan of the probed
-    cells' code partitions + a broadcast table join + partial-agg
-    TakeOrdered — identical to ``ann_ivfadc_topk_indexed``.
-
-    No self-exclusion (the query is not a corpus row); an in-corpus
-    vector passed here will surface itself at ADC distance ~0."""
-    import math
-
-    _validate_index_params(spark, index_dir, nprobe=nprobe, m=None)
-    qv = [int(math.floor(float(x) * QUANT_SCALE)) for x in query_vec]
-    cents = spark.read.parquet(f"{index_dir}/centroids.parquet").collect()
-    ranked = sorted(
-        (
-            -(
-                sum(a * b for a, b in zip(qv, r.qc))
-                / math.sqrt(sum(c * c for c in r.qc))
-            ),
-            int(r.cid),
-        )
-        for r in cents
-    )
-    probe = [cid for _, cid in ranked[:nprobe]]
-
-    books = spark.read.parquet(f"{index_dir}/codebooks.parquet").collect()
-    m_count = max(int(r.m) for r in books) + 1
-    sub = len(qv) // m_count
-    rows = [
-        (
-            int(r.m),
-            int(r.code),
-            sum(
-                (a - b) * (a - b)
-                for a, b in zip(qv[int(r.m) * sub : (int(r.m) + 1) * sub], r.qc)
-            ),
-        )
-        for r in books
-    ]
-    table = spark.createDataFrame(rows, "m int, code int, qd long")
-    codes = spark.read.parquet(f"{index_dir}/codes_by_cell.parquet").filter(
-        F.col("cell").isin(probe)
     )
     return (
         codes.join(F.broadcast(table), ["m", "code"])

@@ -113,35 +113,6 @@ def scalar_columns(word: str, astro_name: bool, is_astro_token: bool) -> list[st
     return cols
 
 
-# dead columns 18-20 — emitted by the reference but never template-addressed
-# (FeaturesVectorAstro.java:197-201 vs astro.template); kept for parity docs.
-def shadow_number(word: str) -> str:
-    return "".join("0" if "0" <= c <= "9" else c for c in word)
-
-
-def word_shape(word: str) -> str:
-    out = []
-    for c in word:
-        if c.isupper():
-            out.append("X")
-        elif c.islower():
-            out.append("x")
-        elif "0" <= c <= "9":
-            out.append("d")
-        else:
-            out.append("c")
-    return "".join(out)
-
-
-def word_shape_trimmed(word: str) -> str:
-    shape = word_shape(word)
-    out = []
-    for c in shape:
-        if not out or out[-1] != c:
-            out.append(c)
-    return "".join(out)
-
-
 # ---------------------------------------------------------------------------
 # scalar sequence labeling
 # ---------------------------------------------------------------------------

@@ -18,7 +18,8 @@ engine's native span records (seq, kind, text, media_ref, offset)
 instead — the contract schema the cluster job emits. Input text gets the
 reference's REST-path newline/tab→space normalization
 (AstroProcessString.java:41 — length-preserving, offsets unaffected);
-blank input → 204 No Content (AstroParser.java:96-98 null-result path).
+blank input → 204 No Content (AstroParser.java:96-98 null-result path);
+a kernel failure on the text → 500 ``{"error": ...}``.
 
 Pure stdlib (http.server, ThreadingHTTPServer) — NO Spark session is
 created: AstroEngine.process_text runs the Arrow kernel driver-side,
@@ -37,6 +38,7 @@ from __future__ import annotations
 import json
 import sys
 import time
+import traceback
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -121,7 +123,12 @@ def make_handler(engine: AstroEngine):
             # remain absolute into the submitted text
             text = text.replace("\n", " ").replace("\t", " ")
             t0 = time.time()
-            spans = engine.process_text(text)
+            try:
+                spans = engine.process_text(text)
+            except Exception as exc:  # the kernel failed on this text
+                traceback.print_exc()
+                self._send(500, {"error": f"{type(exc).__name__}: {exc}"})
+                return
             fmt = urllib.parse.parse_qs(url.query).get("format", ["entities"])[0]
             entities = spans if fmt == "spans" else spans_to_entities(spans)
             self._send(

@@ -31,6 +31,24 @@ from astrospark.oracle import process_text_chunk
 WEIGHTS_PATH = os.path.join(os.path.dirname(__file__), "resources", "weights.npz")
 
 
+def load_default_artifacts():
+    """(vocab, trie, model) from the packaged resources — driver side.
+
+    Uses importlib.resources when the on-disk path is absent so the same
+    code works with astrospark shipped as a zip via spark-submit
+    --py-files (np.load accepts the file-like resource stream)."""
+    vocab, trie = load_artifacts()
+    if os.path.exists(WEIGHTS_PATH):
+        model = CrfModel.load(WEIGHTS_PATH)
+    else:
+        import io
+        from importlib import resources
+
+        blob = (resources.files("astrospark") / "resources" / "weights.npz").read_bytes()
+        model = CrfModel.load(io.BytesIO(blob))  # np.load needs a seekable stream
+    return vocab, trie, model
+
+
 def paragraph_to_sequence(text: str, spans, vocab, trie):
     """(feature-columns, gold labels) for one normalized paragraph."""
     text = text.replace("\n", " ").replace("\t", " ")

@@ -1,9 +1,9 @@
-"""TEI source/sink, text-dir source, CRF feature sink, API façade."""
+"""TEI source/sink, text-dir source, JSONL docs source, API façade."""
 
 import pytest
 
 from astrospark.io import tei
-from astrospark.io.textdir import paragraphs_of_text, read_text_dir, write_crf_features
+from astrospark.io.textdir import read_text_dir
 
 SAMPLE_TEI = """<tei xmlns="http://www.tei-c.org/ns/1.0">
   <teiHeader><fileDesc xml:id="_1"/></teiHeader>
@@ -48,11 +48,6 @@ def test_training_tei_roundtrip():
     rendered = tei.training_tei(paras)
     back = tei.tei_annotated_paragraphs(rendered)
     assert [(t, s) for t, s in back] == paras
-
-
-def test_paragraphs_of_text():
-    text = "line one\nline two\n\n\npara two\n"
-    assert paragraphs_of_text(text) == ["line one\nline two\n", "para two\n"]
 
 
 def test_read_text_dir_and_engine(spark, artifacts, tmp_path):
@@ -214,31 +209,18 @@ def test_process_text_failure_is_isolated(artifacts, request_texts, run_together
     assert engine.process_text("We see M31.") == _oracle_spans("We see M31.", artifacts)
 
 
-def test_crf_feature_sink(tmp_path, artifacts):
-    vocab, trie, _ = artifacts
-    n = write_crf_features(
-        ["We detect GRB 020819B.", "And NGC 1275."], str(tmp_path / "f.crf"), vocab, trie
-    )
-    assert n == 2
-    content = (tmp_path / "f.crf").read_text().rstrip("\n").split("\n")
-    # blank line separates sequences; each feature line has 18 columns
-    assert "" in content
-    first = content[0].split(" ")
-    assert len(first) == 18
-    assert first[0] == "We"
-
 def test_jsonl_docs_roundtrip(spark, tmp_path):
-    """S1 alternate format: interleaved docs survive a JSONL round-trip
-    with the explicit schema (no inference pass) and extract identically
-    to the parquet path."""
+    """S1 alternate format: interleaved docs written as JSON lines read
+    back through ``read_docs(fmt="jsonl")`` with the explicit schema (no
+    inference pass), equal to the source rows."""
     import os
 
     from astrospark.fixtures import docs_dataframe
-    from astrospark.io.sources import read_docs, write_docs_jsonl
+    from astrospark.io.sources import read_docs
 
     docs = docs_dataframe(spark, 20, seed=5, skew_every=10, n_partitions=2)
     path = os.fspath(tmp_path / "docs_jsonl")
-    write_docs_jsonl(docs, path)
+    docs.write.json(path)
     back = read_docs(spark, path, fmt="jsonl")
     assert back.schema == docs.schema
     a = sorted(map(tuple, docs.select("doc_id", "spans").collect()))

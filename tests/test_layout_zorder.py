@@ -57,6 +57,21 @@ def test_zorder_cells_cross_engine(spark):
     assert len(got) > 100  # the 8-bit cell space is well populated
 
 
+def _write_sorted(df, path: str, key_col) -> None:
+    """Range-partition by the key into N_FILES files and sort within
+    each, so every file covers a contiguous key range (for a z-key, a
+    rectangle of the dim space) — the write table-format OPTIMIZE
+    ZORDER does."""
+    (
+        df.withColumn("_zk", key_col)
+        .repartitionByRange(N_FILES, "_zk")
+        .sortWithinPartitions("_zk")
+        .drop("_zk")
+        .write.mode("overwrite")
+        .parquet(path)
+    )
+
+
 def test_zorder_layout_prunes_both_dims(spark, tmp_path):
     """The skipping measurement. Write the same rows twice — z-ordered
     and part-sorted — into N_FILES files each; count files whose
@@ -65,14 +80,14 @@ def test_zorder_layout_prunes_both_dims(spark, tmp_path):
     its own dimension and not at all on the other; z-order prunes
     meaningfully on BOTH, so its worst single-dimension overlap is
     strictly better than the single sort's."""
-    from astrospark.ops.layout import _lineitem_dims, write_zordered, zorder_key
+    from astrospark.ops.layout import _lineitem_dims, zorder_key
 
     dims = _lineitem_dims(spark, SF).cache()
     try:
         z_path = str(tmp_path / "z")
         p_path = str(tmp_path / "p")
-        write_zordered(dims, z_path, zorder_key("d_part", "d_price"), N_FILES)
-        write_zordered(dims, p_path, F.col("d_part"), N_FILES)
+        _write_sorted(dims, z_path, zorder_key("d_part", "d_price"))
+        _write_sorted(dims, p_path, F.col("d_part"))
 
         def file_boxes(path):
             boxes = []
@@ -113,44 +128,6 @@ def test_zorder_layout_prunes_both_dims(spark, tmp_path):
         assert z_worst < p_on_price
     finally:
         dims.unpersist()
-
-
-def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
-    """64 dribble files -> ceil(total/target) files; the row multiset
-    is untouched, and a sort_col compaction restores range clustering
-    (per-file min/max boxes become disjoint-ish)."""
-    from astrospark.ops.layout import compact_parquet
-
-    src = str(tmp_path / "dribble")
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    docs.repartition(64).write.parquet(src)
-    import glob
-
-    assert len(glob.glob(src + "/part-*.parquet")) == 64
-
-    out = str(tmp_path / "compacted")
-    total = sum(
-        __import__("os").path.getsize(f) for f in glob.glob(src + "/part-*.parquet")
-    )
-    target = total // 4 + 1  # aim for ~4 output files
-    stats = compact_parquet(spark, src, out, target_bytes=target)
-    assert stats["files_in"] == 64
-    assert stats["files_out"] == stats["n_target"] <= 5
-
-    a = sorted(map(tuple, spark.read.parquet(src).collect()))
-    b = sorted(map(tuple, spark.read.parquet(out).collect()))
-    assert a == b
-
-    # sorted compaction: doc_id ranges of output files don't interleave
-    out2 = str(tmp_path / "sorted")
-    compact_parquet(spark, src, out2, target_bytes=target, sort_col="doc_id")
-    boxes = []
-    for f in sorted(glob.glob(out2 + "/part-*.parquet")):
-        r = spark.read.parquet(f).agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
-        boxes.append((r[0], r[1]))
-    boxes.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(boxes, boxes[1:]):
-        assert hi1 <= lo2  # disjoint ranges: range-partitioned layout
 
 
 def test_footer_stats_pushed_and_exact(spark):
@@ -222,47 +199,3 @@ def test_contiguous_ids_no_single_partition_plan(spark):
     assert "SinglePartition" not in plan
     assert "rangepartitioning" in plan
     assert "BroadcastHashJoin" in plan
-
-
-def test_cost_balanced_repartition_bounds_skew(spark):
-    """Pathological corpus: one row of weight 10000 among 999 rows of
-    weight 10. Equal-ROW partitioning leaves the giant's partition ~4x
-    over mean load; cost-balanced partitioning bounds every partition
-    at target + max_single_weight (row-atomic optimum), preserves the
-    row multiset, and plans no SinglePartition stage."""
-    from pyspark.sql import functions as F2
-
-    from astrospark.ops.layout import cost_balanced_repartition
-
-    n_parts = 8
-    rows = [(0, 10000)] + [(i, 10) for i in range(1, 1000)]
-    df = spark.createDataFrame(rows, "doc_id long, w long")
-
-    out = cost_balanced_repartition(df, "w", "doc_id", n_parts)
-    assert sorted(map(tuple, out.collect())) == sorted(rows)
-
-    loads = [
-        r.load
-        for r in out.withColumn("_p", F2.spark_partition_id())
-        .groupBy("_p")
-        .agg(F2.sum("w").alias("load"))
-        .collect()
-    ]
-    total = 10000 + 999 * 10
-    target = -(-total // n_parts)
-    assert max(loads) <= target + 10000
-    # the tiny rows spread evenly: every OTHER partition is near target
-    assert sorted(loads)[-2] <= target + 10
-
-    # naive equal-row partitioning for contrast: giant + its row-share
-    naive = (
-        df.repartition(n_parts)
-        .withColumn("_p", F2.spark_partition_id())
-        .groupBy("_p")
-        .agg(F2.sum("w").alias("load"))
-        .collect()
-    )
-    assert max(r.load for r in naive) >= 10000 + 10  # giant never alone
-
-    plan = _plan(out)
-    assert "SinglePartition" not in plan

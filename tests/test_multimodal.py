@@ -1,5 +1,5 @@
 """Multimodal plumbing: schema, Arrow batch shapes, deterministic fake
-decode, and the media<->spans join."""
+decode, and the resize / frame-sample plans."""
 
 import pytest
 
@@ -38,16 +38,6 @@ def test_decode_raises_for_unknown_payload(spark):
         mm.decode_media(junk).collect()
 
 
-def test_features_shape_and_determinism(media):
-    feats = mm.media_features(media).collect()
-    assert len(feats) == 30
-    assert all(len(r.feature) == mm.FEATURE_DIM for r in feats)
-    again = mm.media_features(media).collect()
-    assert {r.media_ref: tuple(r.feature) for r in feats} == {
-        r.media_ref: tuple(r.feature) for r in again
-    }
-
-
 def test_resize_plan_bounds(media):
     plan = mm.resize_plan(media, max_side=224)
     for r in plan.collect():
@@ -60,16 +50,3 @@ def test_frame_sample_plan(media):
     rows = s.groupBy("media_ref").count().collect()
     assert all(r["count"] >= 1 for r in rows)
     assert s.filter(F.col("sample_ms") < 0).count() == 0
-
-
-def test_docs_media_join(spark, media, artifacts):
-    from astrospark.engine.extraction import broadcast_artifacts, extract_spans
-    from astrospark.fixtures import docs_dataframe
-
-    bcast = broadcast_artifacts(spark, artifacts)
-    spans = extract_spans(docs_dataframe(spark, 30, seed=13, skew_every=0), bcast)
-    feats = mm.media_features(media)
-    joined = mm.docs_media_join(spans, feats)
-    out = joined.collect()
-    media_rows = [r for r in spans.collect() if r.media_ref]
-    assert len(out) == len(media_rows)

@@ -90,41 +90,6 @@ def test_aggregations_have_partial_phase(spark, queries):
     assert "partial_count" in plan or "partial_sum" in plan
 
 
-def test_bucketed_join_has_no_exchange(spark, artifacts, tmp_path):
-    """Both sides written bucketed by doc_id with equal bucket counts →
-    the per-document join plans with NO shuffle on either side (the
-    co-located-join pattern for 10^12-scale span⋈doc joins)."""
-    from astrospark.engine.extraction import broadcast_artifacts, extract_spans
-    from astrospark.fixtures import docs_dataframe
-    from astrospark.io.sources import write_spans_bucketed
-
-    bcast = broadcast_artifacts(spark, artifacts)
-    docs = docs_dataframe(spark, 20, seed=9, skew_every=0)
-    spans = extract_spans(docs, bcast)
-    write_spans_bucketed(spans, "spans_b", n_buckets=4)
-    (
-        docs.select("doc_id")
-        .write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(4, "doc_id")
-        .saveAsTable("docs_b")
-    )
-    # disable broadcast so the join actually exercises the bucketed path
-    # (at real scale neither side is broadcastable anyway)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("spans_b").join(spark.table("docs_b"), "doc_id")
-        plan = plan_of(joined)
-        assert "Exchange" not in plan  # no shuffle on either side
-        assert "SortMergeJoin" in plan
-        assert joined.count() == spans.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS spans_b")
-        spark.sql("DROP TABLE IF EXISTS docs_b")
-
-
 def test_runtime_bloom_filter_join_injection(spark):
     """Runtime row-level filtering at scale: when a large shuffle join
     has a selective build side, Catalyst injects a bloom filter —

@@ -219,87 +219,13 @@ def test_indexed_ivfadc_matches_in_query_and_prunes(spark, tmp_path):
     assert "Window" not in plan and "row_number" not in plan
 
 
-def test_vector_probe_numpy_replay(spark, tmp_path):
-    """ann_ivfadc_topk_vector replayed scalar: probe-cell selection
-    must match the stored assignment for an in-corpus query vector, and
-    the ADC top-k must equal a full numpy replay over the probed cells
-    (no self-exclusion — the query vector surfaces itself at ~0)."""
-    from astrospark.ops.caching import release_caches
-    from astrospark.ops.similarity import (
-        PQ_ORACLE_K,
-        PQ_ORACLE_M,
-        TOP_K,
-        ann_ivfadc_topk_vector,
-        build_ann_index,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    idx = str(tmp_path / "annidx")
-    build_ann_index(spark, sf, idx, m=PQ_ORACLE_M, k=PQ_ORACLE_K)
-    release_caches()
-
-    q_id, nprobe = 7, 2
-    qvec = (
-        spark.read.parquet(f"{sf}/embeddings.parquet")
-        .filter(f"vec_id = {q_id}")
-        .collect()[0]
-        .embedding
-    )
-    got = [
-        tuple(r)
-        for r in ann_ivfadc_topk_vector(spark, idx, qvec, nprobe=nprobe).collect()
-    ]
-
-    # probe-list parity: driver-side centroid ranking == stored rnk<=nprobe
-    cells = {
-        r.rnk: r.cell
-        for r in spark.read.parquet(f"{idx}/cells.parquet")
-        .filter(f"vec_id = {q_id} and rnk <= {nprobe}")
-        .collect()
-    }
-    want_probe = {cells[r] for r in cells}
-
-    import math
-
-    from astrospark.ops.similarity import QUANT_SCALE
-
-    qv = [int(math.floor(float(x) * QUANT_SCALE)) for x in qvec]
-    member = {
-        r.vec_id: r.cell
-        for r in spark.read.parquet(f"{idx}/cells.parquet").filter("rnk = 1").collect()
-    }
-    codes = {}
-    for r in spark.read.parquet(f"{idx}/codes_by_cell.parquet").collect():
-        codes.setdefault(r.vec_id, {})[r.m] = r.code
-    books = {
-        (r.m, r.code): list(r.qc)
-        for r in spark.read.parquet(f"{idx}/codebooks.parquet").collect()
-    }
-    sub = len(qv) // PQ_ORACLE_M
-    expected = []
-    for vid, cell in member.items():
-        if cell not in want_probe:
-            continue
-        adist = sum(
-            sum(
-                (a - b) * (a - b)
-                for a, b in zip(qv[mi * sub : (mi + 1) * sub], books[(mi, codes[vid][mi])])
-            )
-            for mi in range(PQ_ORACLE_M)
-        )
-        expected.append((adist, vid))
-    expected.sort()
-    assert got == [(v, d) for d, v in expected[:TOP_K]]
-    assert got[0][0] == q_id  # the in-corpus query surfaces itself first
-
-
 def test_index_probe_param_validation(spark, tmp_path):
     """ADVICE r4: a probe deeper than the index's stored coarse ranking
     (nprobe > build-time max_rank) or an m differing from the build-time
     PQ split must fail loudly — previously the deep probe silently
     scanned at most max_rank cells and the wrong m silently joined wrong
-    codebooks. build_ann_index now persists meta.parquet and both probe
-    entry points validate against it."""
+    codebooks. build_ann_index now persists meta.parquet and the indexed
+    probe validates against it."""
     import pytest
 
     from astrospark.ops.caching import release_caches
@@ -307,7 +233,6 @@ def test_index_probe_param_validation(spark, tmp_path):
         PQ_ORACLE_K,
         PQ_ORACLE_M,
         ann_ivfadc_topk_indexed,
-        ann_ivfadc_topk_vector,
         build_ann_index,
     )
 
@@ -331,12 +256,3 @@ def test_index_probe_param_validation(spark, tmp_path):
         ann_ivfadc_topk_indexed(
             spark, idx, sf, query_vec_id=1, nprobe=1, m=PQ_ORACLE_M * 2
         )
-
-    qvec = (
-        spark.read.parquet(f"{sf}/embeddings.parquet")
-        .filter("vec_id = 1")
-        .collect()[0]
-        .embedding
-    )
-    with pytest.raises(ValueError, match="nprobe=5 exceeds"):
-        ann_ivfadc_topk_vector(spark, idx, qvec, nprobe=5)

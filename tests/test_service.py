@@ -133,3 +133,50 @@ def test_concurrent_requests_equal_serial(server, request_texts, run_together):
     serial = [entities(t) for t in request_texts]
     assert any(serial)
     assert run_together(entities, request_texts) == serial
+
+
+def test_kernel_failure_is_500(server, artifacts, request_texts, run_together, monkeypatch):
+    """A text that makes the kernel raise gets 500 with an error message,
+    not a dropped connection; requests sent with it still answer
+    oracle-equal."""
+    from astrospark import kernel
+    from astrospark.oracle import process_document
+    from astrospark.service import spans_to_entities
+
+    marker = "POISON"
+    real = kernel.extract_batch
+
+    def failing(pdf, *a, **kw):
+        if any(marker in s["text"] for spans in pdf["spans"] for s in spans):
+            raise ValueError("bad text")
+        return real(pdf, *a, **kw)
+
+    monkeypatch.setattr(kernel, "extract_batch", failing)
+    texts = [f"We see NGC 1275 and {marker} here."] + list(request_texts)
+    got = run_together(lambda t: _post(server, urllib.parse.urlencode({"text": t})), texts)
+
+    status, raw = got[0]
+    assert status == 500
+    assert "bad text" in json.loads(raw)["error"]
+    vocab, trie, model = artifacts
+    for text, (status, raw) in zip(texts[1:], got[1:]):
+        assert status == 200
+        text = text.replace("\n", " ").replace("\t", " ")
+        doc = [{"kind": "text", "text": text, "media_ref": "", "offset": 0}]
+        want = spans_to_entities(process_document(doc, vocab, trie, model))
+        assert json.loads(raw)["entities"] == want
+
+
+def test_service_import_skips_pyspark():
+    """The service answers without Spark, so importing it must not pay
+    the pyspark import."""
+    import os
+    import subprocess
+    import sys
+
+    code = "import sys, astrospark.service; print('pyspark' in sys.modules)"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, check=True, cwd=repo
+    )
+    assert out.stdout.strip() == "False"
