@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry`` runs the flagship astronomical-entity extraction
-(SURVEY.md §3.1: scan → salted repartition → one Arrow-UDF stage) over the
+(SURVEY.md §3.1: scan → repartition on doc_id → one Arrow-UDF stage) over the
 sf0.001 documents table. ``queries``/``oracle_sql`` map the operator
 inventory of SURVEY.md §2 plus the training-data-pipeline operators
 (dedup / similarity / text analysis) to DuckDB-checkable pairs. The
@@ -62,7 +62,7 @@ def _extract_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
     from astrospark.fixtures import docs_dataframe
 
     docs = docs_dataframe(spark, 150, seed=42, skew_every=75, n_partitions=8)
-    return extract_spans(docs, _bcast(spark), n_partitions=16, split_threshold=50_000)
+    return extract_spans(docs, _bcast(spark), n_partitions=16)
 
 
 def _extraction_kind_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,8 +9,8 @@ onto one engine object:
   POST /processAstroText        AstroEngine.process_text(str) -> spans
   (PDF upload → segmentation)   upstream; pre-segmented docs table instead
   batch dir createTrainingBatch AstroEngine.process_text_dir(path)
-  (per-request JSON response)   AstroEngine.process_docs(df) -> DataFrame
-                                + io.sources.spans_to_json at the edge
+  (per-request JSON response)   astrospark.service (POST /processAstroText)
+  (batch over many documents)   AstroEngine.process_docs(df) -> DataFrame
 
 One SparkSession + one broadcast per engine instance, mirroring the
 reference's per-JVM singletons (AstroParser.java:67-81).

@@ -128,7 +128,6 @@ class CheckpointedExtraction:
         output_dir: str,
         fingerprint: str,
         max_groups: int | None = None,
-        **extract_kwargs,
     ) -> list[GroupResult]:
         """Process all pending buckets; returns per-group metrics.
 
@@ -150,7 +149,7 @@ class CheckpointedExtraction:
             subset = docs.withColumn("_bucket", bucket_col).filter(
                 F.col("_bucket").isin(group)
             )
-            out = extract_spans(subset.drop("_bucket"), self.bcast, **extract_kwargs)
+            out = extract_spans(subset.drop("_bucket"), self.bcast)
             out = out.withColumn(
                 "_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(self.n_buckets)).cast("int")
             )

@@ -16,31 +16,38 @@ from pyspark.sql import SparkSession
 
 # kernel sweet spot: unique-token amortization grows with batch size until
 # ~8k docs, where the factorized tables fall out of cache (measured
-# 1024..16384). Single source of truth — scripts/submit_extract.py imports
-# this so the spark-submit path cannot drift from the session factory.
+# 1024..16384).
 ARROW_BATCH_ROWS = 4096
+
+# the engine's runtime settings, declared once: build_session and the
+# spark-submit entry (scripts/submit_extract.py) both set them. AQE, Arrow
+# execution with capped records per batch, UTC session time.
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH_ROWS),
+    "spark.sql.session.timeZone": "UTC",
+}
 
 
 def build_session(
     app_name: str = "astrospark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch_rows: int = ARROW_BATCH_ROWS,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS`` sets the local width; unset, it is the CPUs this
+    process may run on."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=ENGINE_CONF)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("ASTROSPARK_DRIVER_MEM", "16g"))
     )

@@ -5,8 +5,8 @@ Synthesizes the engine's input table
 from the seeded corpus generator: text/section chunks with astronomical
 mentions, table/figure chunks with embedded newlines (exercising the
 per-line path), media passthrough spans, blank chunks, empty docs, and a
-configurable fraction of ~50x-length skew docs (drives the AQE/salting
-story at scale). Pure-Python rows (for tests) or a Spark DataFrame.
+configurable fraction of ~50x-length skew docs (the size skew the engine
+meets at scale). Pure-Python rows (for tests) or a Spark DataFrame.
 """
 
 from __future__ import annotations

@@ -6,8 +6,8 @@ jars the same fixed schema is read from parquet — the engine code is
 format-agnostic (`spark.read.format(...)`), and every scan benefits from
 Catalyst column pruning + predicate pushdown either way.
 
-S5: `to_json` only at the API edge, mirroring the reference's hand-built
-JSON response
+S5: JSON only at the service edge (astrospark/service.py), mirroring the
+reference's hand-built JSON response
 (/root/reference/src/main/java/org/grobid/core/data/AstroEntity.java:198-236).
 """
 
@@ -54,12 +54,4 @@ def documents_to_docs(documents: DataFrame) -> DataFrame:
                 F.lit(0).alias("offset"),
             )
         ).alias("spans"),
-    )
-
-
-def spans_to_json(spans: DataFrame) -> DataFrame:
-    """API-edge JSON rendition (one json string per span row)."""
-    return spans.select(
-        "doc_id",
-        F.to_json(F.struct("seq", "kind", "text", "media_ref", "offset")).alias("span_json"),
     )

@@ -36,8 +36,8 @@ from astrospark.oracle import LINE_KINDS, TEXT_KINDS, is_blank, java_trim
 from astrospark.templates import LABEL_BEGIN, LABEL_OTHER
 from astrospark.unicode_norm import NORMALIZE_TABLE
 
-# `end` (exclusive char end) is internal: the engine uses it to re-rank
-# split-document output exactly like the in-batch sort, then drops it.
+# `end` (exclusive char end) is the in-batch sort key after `offset`; the
+# engine drops it from the public output.
 OUTPUT_COLUMNS = ("doc_id", "seq", "kind", "text", "media_ref", "offset", "end")
 
 def extract_batch(pdf: pd.DataFrame, vocab, trie, model: CrfModel) -> pd.DataFrame:

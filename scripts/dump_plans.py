@@ -15,7 +15,7 @@ sys.path.insert(0, REPO)
 
 NOTES = {
     "extract_flagship": (
-        "One scan → salted repartition → ONE MapInPandas stage → project. "
+        "One scan → repartition on doc_id → ONE MapInPandas stage → project. "
         "No other shuffle; ReadSchema carries only doc_id+spans."
     ),
     "p2_blank_filter": (

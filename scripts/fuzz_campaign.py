@@ -8,10 +8,9 @@ many docs per extract_batch call (catches cross-document state leaks
 through the batch-level factorization).
 
 Campaign B (Spark pipeline, giant docs): 120 docs of 2k-15k tokens across
-text/table/figure/media chunks, run through extract_spans BOTH with and
-without the skew-split path — catches long-sequence decode drift (the
-float64 fix, commit 3f7769b, was found by this campaign) and split/rerank
-bugs.
+text/table/figure/media chunks, run through extract_spans — catches
+long-sequence decode drift (the float64 fix, commit 3f7769b, was found by
+this campaign) and any divergence between the Spark path and the oracle.
 
 Campaign C (reference character inventory): vocab/trie built from the
 REAL astroVoc.txt (read-only) and fuzz texts drawn from its 12,926 SIMBAD
@@ -24,10 +23,9 @@ must match the oracle for any model the plug produces.
 
 Run: python scripts/fuzz_campaign.py   (exit 0 = all equal)
 Last recorded (round 3, default artifacts): A: 24000 docs / 147479
-spans / 0 mismatches; B/split + B/nosplit: 120 docs / 117646 spans / 0
-mismatches each; C: 9000 docs / 57065 spans / 0 mismatches; D: 6040
-docs under logistic scorer (held-out f1 0.878) / 103335 spans / 0
-mismatches.
+spans / 0 mismatches; B: 120 docs / 117646 spans / 0 mismatches; C: 9000
+docs / 57065 spans / 0 mismatches; D: 6040 docs under logistic scorer
+(held-out f1 0.878) / 103335 spans / 0 mismatches.
 """
 
 from __future__ import annotations
@@ -141,18 +139,15 @@ def campaign_b(vocab, trie, model, names) -> int:
         docs,
         "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
-    mism = 0
-    for label, kw in (("split", {"split_threshold": 20_000}), ("nosplit", {})):
-        out = extract_spans(df, bcast, **kw).collect()
-        by_doc: dict = {}
-        for r in out:
-            by_doc.setdefault(r.doc_id, []).append((r.seq, r.kind, r.text, r.media_ref, r.offset))
-        bad = sum(
-            sorted(by_doc.get(d["doc_id"], [])) != sorted(_want(d, vocab, trie, model))
-            for d in docs
-        )
-        print(f"B/{label}: {len(docs)} docs, {len(out)} spans, {bad} mismatches")
-        mism += bad
+    out = extract_spans(df, bcast).collect()
+    by_doc: dict = {}
+    for r in out:
+        by_doc.setdefault(r.doc_id, []).append((r.seq, r.kind, r.text, r.media_ref, r.offset))
+    mism = sum(
+        sorted(by_doc.get(d["doc_id"], [])) != sorted(_want(d, vocab, trie, model))
+        for d in docs
+    )
+    print(f"B: {len(docs)} docs, {len(out)} spans, {mism} mismatches")
     spark.stop()
     return mism
 

@@ -32,9 +32,8 @@ sys.path.insert(0, {repo!r})
 from astrospark.engine.session import build_session
 from astrospark.engine.extraction import broadcast_artifacts, extract_spans
 cpus = {cpus}
-from astrospark.engine.session import ARROW_BATCH_ROWS
 spark = build_session(app_name=f"scaling-{{cpus}}", master=f"local[{{cpus}}]",
-                      shuffle_partitions=max(cpus, 8), arrow_batch_rows=ARROW_BATCH_ROWS)
+                      shuffle_partitions=max(cpus, 8))
 docs = spark.read.parquet({docs_path!r})
 bcast = broadcast_artifacts(spark)
 n_docs = docs.count()

@@ -31,22 +31,13 @@ def main() -> None:
     inp, out_dir = sys.argv[1], sys.argv[2]
     ckpt_dir = sys.argv[3] if len(sys.argv) > 3 else None
 
-    from astrospark.engine import session as engine_session
+    from astrospark.engine.session import ENGINE_CONF
 
-    spark = SparkSession.builder.appName("astrospark-extract").getOrCreate()
-    # runtime-settable engine defaults (cluster-level conf stays with
-    # spark-submit flags; these are safe to set post-launch). Arrow batch
-    # size imports the measured kernel sweet spot from engine/session.py
-    # so the two entry points cannot drift.
-    for k, v in (
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.execution.arrow.maxRecordsPerBatch", str(engine_session.ARROW_BATCH_ROWS)),
-        ("spark.sql.session.timeZone", "UTC"),
-    ):
-        spark.conf.set(k, v)
+    # the engine's runtime settings; cluster-level conf stays with the
+    # spark-submit flags
+    spark = (
+        SparkSession.builder.appName("astrospark-extract").config(map=ENGINE_CONF).getOrCreate()
+    )
 
     from astrospark.engine.extraction import broadcast_artifacts, extract_spans
 

@@ -28,7 +28,7 @@ def queries():
 
 
 def test_extraction_single_exchange_single_udf(spark, artifacts):
-    """Flagship plan: one salted repartition Exchange, ONE MapInPandas,
+    """Flagship plan: one repartition Exchange on doc_id, ONE MapInPandas,
     nothing else wide (north_rule: one narrow Arrow-UDF stage)."""
     from astrospark.engine.extraction import broadcast_artifacts, extract_spans
     from astrospark.fixtures import docs_dataframe
@@ -40,6 +40,17 @@ def test_extraction_single_exchange_single_udf(spark, artifacts):
     # exactly the explicit repartition; no join/agg/sort exchanges
     assert plan.count("Exchange (") == 1
     for bad in ("SortMergeJoin", "CartesianProduct", "BroadcastNestedLoopJoin"):
+        assert bad not in plan
+
+
+def test_contract_extraction_is_one_path(spark, queries):
+    """The contract's interleaved extraction, skew docs included, takes the
+    same single path: one Exchange, one MapInPandas, no Window re-rank and
+    no Union of a second scan."""
+    plan = plan_of(queries["extract_interleaved"](spark, SF_DIR))
+    assert plan.count("MapInPandas (") == 1
+    assert plan.count("Exchange (") == 1
+    for bad in ("Window", "Union"):
         assert bad not in plan
 
 
